@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -80,23 +82,28 @@ object Reshape {
     * SECOND matchup within one scrape (Monday pull showing tonight's
     * AND next weekend's game), drop that second game entirely — both
     * its rows. Composed: W1 pair id over the explicit order + per-team
-    * cumcount + distinct offending game ids + left_anti.
+    * cumcount + a per-game "has a rank-2 row" window flag, so the input
+    * plan is read once (no self-join on the offending game ids).
     * Faithful to the reference: only rank == 2 marks a game (a third
     * appearance is dropped transitively only if its game shares the
-    * rank-2 game id). Output keeps the assigned `game_id`.
+    * rank-2 game id). A row with a null `partition` key is never
+    * dropped, as under the equi-join this replaces. Output keeps the
+    * assigned `game_id`, after the `partition` columns.
     */
   def dropRepeatMatchups(df: DataFrame, teamCol: String, order: Seq[Column],
                          partition: Seq[String] = Nil): DataFrame = {
+    val gameKey = partition :+ "game_id"
     val wPairs = Window.partitionBy(partition.map(col): _*).orderBy(order: _*)
     val wTeam = Window.partitionBy((partition :+ teamCol).map(col): _*)
       .orderBy(order: _*)
-    val withIds = df
-      .withColumn("game_id", (floor((row_number().over(wPairs) - 1) / 2) + 1).cast("int"))
-      .withColumn("_team_rank", row_number().over(wTeam))
-    val offending = withIds.filter(col("_team_rank") === 2)
-      .select((partition :+ "game_id").map(col): _*).distinct()
-    withIds.join(offending, partition :+ "game_id", "left_anti")
-      .drop("_team_rank")
+    val wGame = Window.partitionBy(gameKey.map(col): _*)
+    val keyed = partition.map(col(_).isNotNull).foldLeft(lit(true))(_ && _)
+    df.withColumns(ListMap(
+        "game_id" -> (floor((row_number().over(wPairs) - 1) / 2) + 1).cast("int"),
+        "_team_rank" -> row_number().over(wTeam)))
+      .withColumn("_repeat", max(col("_team_rank") === 2).over(wGame))
+      .filter(!(keyed && col("_repeat")))
+      .select((gameKey ++ df.columns.filterNot(gameKey.contains)).map(col): _*)
   }
 
   /** A3 argmax: value AND name of the greatest of several named

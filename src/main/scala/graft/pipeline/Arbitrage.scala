@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -49,12 +51,12 @@ object Arbitrage {
     // payout legs only (arbitrage_scanner.py:275). Per bookie:
     // strip trailing " +" (F6), EVEN -> +100 / N/A -> null (F8), then
     // coerce like pd.to_numeric(errors='coerce') via try_cast.
+    // One ordered projection for all bookies: a withColumn per bookie
+    // would re-analyse the growing plan once per bookie.
     val payouts = withGame.filter(col("Info") === "Payout")
-    val parsed = bookies.foldLeft(payouts) { (df, b) =>
-      df.withColumn(s"${b}__v",
-        Odds.normalizePayout(trim(regexp_replace(col(b), "[ +]+$", "")))
-          .try_cast("double"))
-    }
+    val parsed = payouts.withColumns(ListMap(bookies.map(b =>
+      s"${b}__v" -> Odds.normalizePayout(
+        trim(regexp_replace(col(b), "[ +]+$", ""))).try_cast("double")): _*))
 
     // per-leg best payout + which bookie offers it: struct-argmax
     // (replaces the O(cols) row scan at arbitrage_scanner.py:350-355).
@@ -121,34 +123,41 @@ object Arbitrage {
     * keyed (Sport, BetType, game_id) like every game-scoped rule.
     * Games involving a `starBookies` member (legal in only one) keep
     * both legs but the Sport is star-prefixed as a warning marker.
-    * Both rule sets are tiny: broadcast semi/anti, facts never
-    * shuffle.
+    * Both rules are per-game window flags, `max(best_bookie IN (...))`
+    * over the game key `detect` already partitions by: the alert plan
+    * is read once, with no self-join and no extra shuffle. As with an
+    * equi-join on the game key, a leg with a null key part matches no
+    * game: it is neither removed nor starred.
     */
   def jurisdiction(alerts: DataFrame, bannedBookies: Seq[String],
                    starBookies: Seq[String] = Nil): DataFrame = {
     val keyCols = Seq("Sport", "BetType", "game_id")
-    val banned = alerts.filter(col("best_bookie").isin(bannedBookies: _*))
-      .select(keyCols.map(col): _*).distinct()
-    val kept = alerts.join(broadcast(banned), keyCols, "left_anti")
-    if (starBookies.isEmpty) kept
-    else {
-      val starred = kept.filter(col("best_bookie").isin(starBookies: _*))
-        .select(keyCols.map(col): _*).distinct()
-        .withColumn("_star", lit(true))
-      kept.join(broadcast(starred), keyCols, "left")
+    val wGame = Window.partitionBy(keyCols.map(col): _*)
+    val keyed = keyCols.map(col(_).isNotNull).reduce(_ && _)
+    def gameUses(bs: Seq[String]): Column =
+      keyed && coalesce(max(col("best_bookie").isin(bs: _*)).over(wGame), lit(false))
+    // a banned game is removed whole, so the star flag over the
+    // pre-filter rows equals the flag over the surviving games
+    val flagged = alerts.withColumns(ListMap(
+      Seq("_banned" -> bannedBookies, "_star" -> starBookies)
+        .collect { case (n, bs) if bs.nonEmpty => n -> gameUses(bs) }: _*))
+    val kept = if (bannedBookies.isEmpty) flagged else flagged.filter(!col("_banned"))
+    val marked =
+      if (starBookies.isEmpty) kept
+      else kept
         .withColumn("Sport",
           when(col("_star"), concat(lit("*"), col("Sport"))).otherwise(col("Sport")))
-        .drop("_star")
         // the star must reach the DELIVERED channel too: rebuild the
         // message from the (now starred) Sport, like the reference
         // formats Combined AFTER the star markup
         // (arbitrage_scanner.py:474-489).
         .withColumn("message", messageExpr)
-    }
+    // game key first: the column order the join form produced
+    marked.select((keyCols ++ alerts.columns.filterNot(keyCols.contains)).map(col): _*)
   }
 
   /** Notification text (arbitrage_scanner.py:478-489 shape). */
-  private def messageExpr: Column =
+  private[graft] def messageExpr: Column =
     format_string("%s %s %s: bet %.2f on %s @ %s (%s), margin %d%%",
       col("Sport"), col("BetType"), col("Team"), col("stake"),
       col("Team"), Odds.plusPrefix(col("max_payout")), col("best_bookie"),

@@ -16,9 +16,18 @@ import graft.sources.TeamDims
   *   NotificationLog.rateLimitAndAppend (E3 feedback loop, K2) ->
   *   Alerting.deliver (K3).
   *
-  * Everything up to the sinks is ONE lazy plan; the only driver-side
-  * materializations are the two bounded sink collects and the log
-  * append (pinned, see NotificationLog).
+  * The grid after finished-game removal (`current`) is pinned ONCE
+  * with a lazy `localCheckpoint`: the mirror, `Arbitrage.detect` and
+  * the log append all start from that one materialized relation
+  * instead of each re-analysing, re-planning and re-running the
+  * sources -> normalize -> bovada -> scores lineage (a shared
+  * intermediate gets no ReuseExchange across separate actions). Being
+  * lazy, the pin runs the grid's shuffle stages when it is taken and
+  * its last stage inside the first consumer's job (the mirror's
+  * collect, or the log append when there is no mirror): no stage runs
+  * twice. The driver-side materializations are then the two bounded
+  * sink collects and the log append (pinned, see NotificationLog),
+  * each planned over the small pinned grid.
   */
 object Engine {
 
@@ -64,6 +73,7 @@ object Engine {
       Scores.finishedGames(raw, sport)
     }.reduceOption(_ unionByName _)
     val current = finished.fold(withBov)(f => Scores.removeFinished(withBov, f))
+      .localCheckpoint(eager = false)
 
     // K1: the sheet mirror gets the full current grid with the
     // updated_at display stamp (arbitrage_scanner.py:296-320).

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Odds, TextNorm}
@@ -99,13 +101,12 @@ object Normalize {
     // Payout rows keep everything after the first space (ML: the
     // whole cell). EVEN/N-A normalization happens downstream
     // (Arbitrage.detect / Odds.normalizePayout) like the reference.
-    bookies.foldLeft(expanded) { (df, b) =>
-      df.withColumn(b,
-        when(col("Info") === "Line",
-          Odds.totalLineToSigned(TextNorm.firstToken(col(b))))
-          .otherwise(when(col("BetType") === "ML", col(b))
-            .otherwise(TextNorm.afterFirstSpace(col(b)))))
-    }
+    // One projection for all bookies, not one analysis pass each.
+    expanded.withColumns(ListMap(bookies.map(b => b ->
+      when(col("Info") === "Line",
+        Odds.totalLineToSigned(TextNorm.firstToken(col(b))))
+        .otherwise(when(col("BetType") === "ML", col(b))
+          .otherwise(TextNorm.afterFirstSpace(col(b))))): _*))
   }
 
   /** J2 (arbitrage_scanner.py:205-209): merge the bovada quote column

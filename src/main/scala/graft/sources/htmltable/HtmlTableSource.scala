@@ -132,8 +132,9 @@ class HtmlTable(path: String, tableIndex: Int) extends Table with SupportsRead {
       // the session's Hadoop conf (spark.hadoop.* — credentials,
       // object-store endpoints, default FS) captured driver-side as a
       // plain serializable map and rebuilt on executors: a bare
-      // `new Configuration()` would see classpath defaults only.
-      private def hadoopConfMap: Map[String, String] = {
+      // `new Configuration()` would see classpath defaults only. Built
+      // once per scan: partition planning and the reader factory share it.
+      private lazy val hadoopConfMap: Map[String, String] = {
         import scala.jdk.CollectionConverters._
         org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
           .iterator().asScala.map(e => e.getKey -> e.getValue).toMap

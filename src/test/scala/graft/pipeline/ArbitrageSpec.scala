@@ -52,4 +52,12 @@ class ArbitrageSpec extends SparkSpec {
     val out = Arbitrage.detect(grid, bookies, minMarginPct = 6).count()
     assert(out == 0) // the 5% arb is below a 6% threshold
   }
+
+  test("plan shape: jurisdiction flags games in a window, with no self-join") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val plan = Arbitrage.jurisdiction(Arbitrage.detect(grid, bookies, minMarginPct = 0),
+      bannedBookies = Seq("Caesars"), starBookies = Seq("DraftKings"))
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join => j }.isEmpty, plan.treeString)
+  }
 }

@@ -59,4 +59,13 @@ class BovadaSpec extends SparkSpec {
     // game 2 removed entirely — including the innocent Rams side
     assert(q == Set("Seahawks", "49ers"))
   }
+
+  test("plan shape: the blob is scanned once (repeat-matchup flag, no self-join)") {
+    val dir = java.nio.file.Files.createTempDirectory("bovada").toString + "/blob"
+    Seq(blob).toDF("value").write.text(dir)
+    val blobs = spark.read.option("wholetext", "true").text(dir)
+      .select($"value".as("text"))
+    val plan = Bovada.quotes(blobs, "text").queryExecution.optimizedPlan
+    assert(plan.collectLeaves().size == 1, plan.treeString)
+  }
 }

@@ -67,4 +67,28 @@ class NotificationLogSpec extends SparkSpec {
     // durable state: the log now holds 4 rows
     assert(log.read(spark).count() == 4)
   }
+
+  test("a file written before updated_at existed reads back null and still counts") {
+    val dir = Files.createTempDirectory("nlog").toFile.getAbsolutePath + "/log"
+    // the older, narrower log layout: no updated_at column
+    Seq(("A", ts(1), "old1"), ("A", ts(2), "old2")).toDF("team", "sent_at", "message")
+      .write.parquet(dir)
+    val log = new graft.sinks.NotificationLog(dir)
+    val old = log.read(spark)
+    assert(old.columns.toSeq == Seq("team", "sent_at", "message", "updated_at"))
+    assert(old.filter($"updated_at".isNull).count() == 2)
+    // two of A's three per day are already spent in the old file
+    val out = log.rateLimitAndAppend(
+      Seq(("A", ts(3), "m3"), ("A", ts(4), "m4"), ("B", ts(3), "b1"))
+        .toDF("team", "ts", "message"),
+      maxPerDay = 3, appendedAt = lit(ts(5)))
+    assert(out.select("team", "message").as[(String, String)].collect().toSet ==
+      Set(("A", "m3"), ("B", "b1")))
+    // both layouts read together: old rows null, new rows stamped
+    val all = log.read(spark).select("message", "updated_at")
+      .as[(String, Option[String])].collect().toMap
+    assert(all.keySet == Set("old1", "old2", "m3", "b1"))
+    assert(all("old1").isEmpty && all("old2").isEmpty)
+    assert(all("m3").nonEmpty && all("b1").nonEmpty)
+  }
 }

@@ -1,0 +1,111 @@
+#!/usr/bin/env python3
+"""Paired A/B runs of the repo benchmark: a parent revision against the
+working tree.
+
+    python3 tools/ab_perfbench.py <parent-rev> <workload> <pairs> [--seed N]
+
+Run from the root of a checkout. The parent revision is exported with
+`git archive` into a temporary directory; each pair then runs
+`perfbench/run.py` once in the parent export and once in the working
+tree, with the same seed (seed, seed+1, ... per pair), the run length
+BENCHMARK.json sets, and alternating which side goes first. Each side's
+benchmark build is cached by its own source stamp, so only the first
+run of a side compiles.
+
+Prints every run, then per end-to-end metric each side's median and
+quartiles, the change's win count (ties count for neither side), and
+whether a gain could be claimed on it: the change wins at least 9/10 of
+the pairs and the medians differ by more than the parent's
+interquartile distance. Every run must report `correct`; a pair with a
+run that does not is listed and counts as a loss.
+"""
+import argparse
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+
+
+def run_once(checkout, workload, seed, seconds):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    r = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = [ln for ln in r.stdout.splitlines() if ln.strip()]
+    try:
+        out = json.loads(lines[-1])
+    except (IndexError, ValueError):
+        sys.stderr.write(r.stderr[-2000:])
+        return {"correct": False, "metrics": {}}
+    return out
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def main():
+    p = argparse.ArgumentParser()
+    p.add_argument("parent_rev")
+    p.add_argument("workload")
+    p.add_argument("pairs", type=int)
+    p.add_argument("--seed", type=int, default=1)
+    a = p.parse_args()
+
+    root = os.getcwd()
+    with open(os.path.join(root, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    seconds = bench["run_seconds"]
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+
+    parent = tempfile.mkdtemp(prefix="ab-parent-")
+    try:
+        archive = subprocess.run(["git", "archive", a.parent_rev], cwd=root,
+                                 capture_output=True, check=True).stdout
+        subprocess.run(["tar", "-x", "-C", parent], input=archive, check=True)
+        sides = {"parent": parent, "change": root}
+        runs = {"parent": [], "change": []}
+        for i in range(a.pairs):
+            seed = a.seed + i
+            order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+            for side in order:
+                out = run_once(sides[side], a.workload, seed, seconds)
+                runs[side].append(out)
+                vals = {k: round(v["value"], 4) for k, v in out["metrics"].items()
+                        if k in better}
+                print(f"pair {i} seed {seed} {side:6s} correct={out.get('correct')} "
+                      f"{json.dumps(vals)}", flush=True)
+
+        bad = [(s, i) for s in runs for i, o in enumerate(runs[s])
+               if not o.get("correct")]
+        print(f"\n{a.workload}: {a.pairs} pairs, seeds {a.seed}..{a.seed + a.pairs - 1}, "
+              f"{seconds:g} s runs; runs not correct: {bad or 'none'}")
+        for name, direction in better.items():
+            pairs = [(po["metrics"][name]["value"], co["metrics"][name]["value"],
+                      po.get("correct") and co.get("correct"))
+                     for po, co in zip(runs["parent"], runs["change"])
+                     if name in po["metrics"] and name in co["metrics"]]
+            if not pairs:
+                continue
+            sign = 1 if direction == "lower" else -1
+            wins = sum(1 for x, y, ok in pairs if ok and (x - y) * sign > 0)
+            pq = quartiles([x for x, _, _ in pairs])
+            cq = quartiles([y for _, y, _ in pairs])
+            gain = wins >= 0.9 * a.pairs and (pq[1] - cq[1]) * sign > pq[2] - pq[0]
+            print(f"  {name:13s} parent median {pq[1]:.4g} (q1 {pq[0]:.4g}, q3 {pq[2]:.4g})"
+                  f" | change median {cq[1]:.4g} (q1 {cq[0]:.4g}, q3 {cq[2]:.4g})"
+                  f" | change wins {wins}/{a.pairs}"
+                  f" | median change {100 * (cq[1] - pq[1]) / pq[1] if pq[1] else 0:+.1f}%"
+                  f" | gain {'holds' if gain else 'not shown'}")
+        return 0
+    finally:
+        shutil.rmtree(parent, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    sys.exit(main())
