@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *                     per-round lineage-truncation job every
   *                     iterative loop schedules)
   *   cc_round        — the EXACT per-round compound of
-  *                     Dedup.connectedComponents: sym-join +
+  *                     Dedup.connectedComponentsLoop: sym-join +
   *                     group-min + left joins + observe +
   *                     localCheckpoint over a toy edge set
   *   bounded_collect — a limit(8).collect() (the routing-pin jobs of

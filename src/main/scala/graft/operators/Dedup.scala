@@ -3,9 +3,15 @@ package graft.operators
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.LocalRows
+import org.apache.spark.sql.types._
 import graft.functions.Text
 
 /** Deduplication operators for training-data curation at 100 TB:
@@ -472,29 +478,104 @@ object Dedup {
 
   /** Connected components over near-dup pairs — the clustering step
     * that turns pairwise matches into dedup groups (keep one doc per
-    * cluster). Iterative min-label propagation WITH POINTER JUMPING:
-    * every node starts as its own label and each round takes the min
+    * cluster). Returns (id, cluster) with cluster = the min id of the
+    * component under Spark's ordering of the id type: one row per
+    * distinct endpoint, and one (null, null) row when an endpoint is
+    * null (a null id joins nothing, so it never links two ids).
+    *
+    * Two paths, one answer. The edge list is bounded by the batch on
+    * every ingest caller (a 1000-doc batch yields a few hundred
+    * pairs), so one job collects at most LocalEdgeCap + 1 edges and,
+    * when no more than the cap arrive, a driver union-find clusters
+    * them and the result is a local relation: the job count is fixed
+    * whatever the graph's diameter. Above the cap — or for an id type
+    * whose equality and ordering the driver does not reproduce
+    * exactly — the distributed fixpoint `connectedComponentsLoop` runs
+    * (re-evaluating `pairs`); it is also the oracle the property tests
+    * hold the driver path to. */
+  def connectedComponents(pairs: DataFrame,
+                          aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
+    val base = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    // the loop's id column: both endpoints widened to one type by its
+    // union (analysis only, no job)
+    val id = base.unionByName(base.select(col("dst").as("src"), col("src").as("dst")))
+      .schema("src")
+    if (!LocalIdTypes(id.dataType)) connectedComponentsLoop(pairs, aCol, bCol)
+    else {
+      val edges = LocalRows.collect(base
+        .select(col("src").cast(id.dataType), col("dst").cast(id.dataType))
+        .limit(LocalEdgeCap + 1))
+      if (edges.length > LocalEdgeCap) connectedComponentsLoop(pairs, aCol, bCol)
+      else LocalRows.relation(pairs.sparkSession,
+        StructType(Seq(StructField("id", id.dataType, id.nullable),
+          StructField("cluster", id.dataType, id.nullable))),
+        unionFind(edges, id.dataType))
+    }
+  }
+
+  /** Edge cap of connectedComponents' driver path: a constant, not a
+    * setting — 100k edges of two ids are a few MB on the driver, and
+    * a batch-bounded edge list sits far below it. */
+  private[graft] val LocalEdgeCap = 100000
+
+  /** Id types whose driver-side equality (Catalyst values' equals)
+    * and ordering match the loop's joins and `least` exactly: integral
+    * types and binary-collated strings (compared as UTF-8 bytes).
+    * Floating ids (NaN, -0.0 normalisation), decimals and collated
+    * strings take the loop. */
+  private val LocalIdTypes: Set[DataType] =
+    Set(ByteType, ShortType, IntegerType, LongType, StringType)
+
+  /** Union-find over collected (src, dst) Catalyst rows, attaching the
+    * larger root under the smaller so every root is its component's
+    * min id; returns the loop's (id, cluster) rows. Iterative find
+    * with path compression: union-by-min alone can build a chain as
+    * deep as the component before the first compression. */
+  private def unionFind(edges: Array[InternalRow], dt: DataType): Seq[InternalRow] = {
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    var sawNull = false
+    edges.foreach { e =>
+      val (a, b) = (e.get(0, dt), e.get(1, dt))
+      Seq(a, b).foreach(x => if (x == null) sawNull = true else parent.putIfAbsent(x, x))
+      if (a != null && b != null) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) { if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
+      }
+    }
+    val ids = parent.keySet.asScala.toSeq
+    ids.map(i => InternalRow(i, find(i))) ++
+      (if (sawNull) Seq(InternalRow(null, null)) else Nil)
+  }
+
+  /** The distributed connected components: iterative min-label
+    * propagation WITH POINTER JUMPING — connectedComponents' path
+    * above LocalEdgeCap edges and the oracle of its driver path.
+    * Every node starts as its own label and each round takes the min
     * of (own label, neighbors' labels, label-of-own-label). The
     * label-of-label term is the pointer-jumping step (Shiloach &
     * Vishkin lineage): label values are node ids, so chasing one hop
     * up the label forest per round HALVES the remaining distance to
     * the component root — O(log diameter) rounds where plain
-    * propagation needs O(diameter). Dup clusters are shallow (2-4
-    * rounds either way), but thin-chain graphs — mutual-KNN chains
-    * (q224), long co-occurrence paths — have diameter O(n), where
-    * plain propagation scheduled one fixpoint job per HOP (measured:
-    * the q224 CC ran ~100 rounds at sf0.1; VERDICT r11 #1's
-    * job-count smell). The combined operator is monotone
-    * non-increasing with the same fixpoint (labels constant means
-    * every root self-points and no neighbor improves — exactly
+    * propagation needs O(diameter). The combined operator is
+    * monotone non-increasing with the same fixpoint (labels constant
+    * means every root self-points and no neighbor improves — exactly
     * propagation's fixpoint), so results are bit-identical.
     *
     * Each round localCheckpoints the label table: iterative plans
-    * MUST truncate lineage or the DAG grows exponentially.
-    * Returns (id, cluster) where cluster = min id in the component.
+    * MUST truncate lineage or the DAG grows exponentially. The round
+    * count follows the graph, one job per round at least.
     */
-  def connectedComponents(pairs: DataFrame,
-                          aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
+  private[graft] def connectedComponentsLoop(pairs: DataFrame,
+                                             aCol: String = "id_a",
+                                             bCol: String = "id_b"): DataFrame = {
     // one materialization of the (possibly expensive) pair plan; the
     // symmetrized edge list derives from the cached base, not from
     // two fresh evaluations of the pair pipeline.

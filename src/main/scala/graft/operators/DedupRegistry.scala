@@ -58,9 +58,7 @@ class DedupRegistry(path: String, nBuckets: Int = 8) {
     // worst possible failure mode, so schema errors propagate
     // (ADVICE r4, same rule as NearDupRegistry.read).
     val loc = indexLocation(spark)
-    if (!RegistryIO.committedDataExists(spark, loc)) empty
-    else {
-      val d = spark.read.parquet(loc)
+    RegistryIO.readCommittedParquet(spark, loc).fold(empty) { d =>
       require(d.columns.contains("fp"),
         s"DedupRegistry at $loc exists but has no 'fp' column " +
           s"(found: ${d.columns.mkString(", ")}) — refusing to treat " +

@@ -186,14 +186,12 @@ class EmbedDedupRegistry(path: String, epsPermille: Int) {
   /** One tier's raw frame (schema-checked), or None when never
     * committed. */
   private def readTierRaw(spark: SparkSession, d: String): Option[DataFrame] =
-    if (!RegistryIO.committedDataExists(spark, d)) None
-    else {
-      val t = spark.read.parquet(d)
+    RegistryIO.readCommittedParquet(spark, d).map { t =>
       val missing = Seq("id", "vq", "nq", "cell").filterNot(t.columns.contains)
       require(missing.isEmpty,
         s"EmbedDedupRegistry at $d exists but lacks ${missing.mkString(", ")} " +
           "— refusing to treat a corrupt registry as empty")
-      Some(t)
+      t
     }
 
   /** Signature projection shared by the tiers: legacy generations

@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** The ONE implementation of the registry bootstrap policy (ADVICE
   * r4, refined by review): a state/registry path maps to "empty"
@@ -23,22 +28,47 @@ object RegistryIO {
     * prevent. Markers are `_`/`.`-prefixed (SUCCESS files, CRC
     * sidecars, in-flight tmp) — the same classes Spark's own reader
     * skips. */
-  def committedDataExists(spark: SparkSession, path: String): Boolean = {
+  def committedDataExists(spark: SparkSession, path: String): Boolean =
+    firstDataFile(spark, path).isDefined
+
+  /** The first committed data file under `path` in listing order,
+    * found by the scan `committedDataExists` describes (it stops at
+    * the first hit). */
+  def firstDataFile(spark: SparkSession,
+                    path: String): Option[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && {
-      def scan(dir: org.apache.hadoop.fs.Path): Boolean =
-        fs.listStatus(dir).exists { s =>
-          val n = s.getPath.getName
-          if (s.isDirectory)
-            // partition dirs (cell=...) hold the files; _temporary
-            // and other _-prefixed dirs are uncommitted scaffolding
-            !n.startsWith("_") && !n.startsWith(".") && scan(s.getPath)
-          else !n.startsWith("_") && !n.startsWith(".")
-        }
-      scan(p)
-    }
+    def scan(dir: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).iterator.flatMap { s =>
+        val n = s.getPath.getName
+        // partition dirs (cell=...) hold the files; _temporary and
+        // other _-prefixed dirs are uncommitted scaffolding
+        if (n.startsWith("_") || n.startsWith(".")) None
+        else if (s.isDirectory) scan(s.getPath)
+        else Some(s)
+      }.nextOption()
+    if (fs.exists(p)) scan(p) else None
   }
+
+  /** Committed parquet data at `path`, or None when never committed.
+    * The read schema comes from ONE committed file's footer, read on
+    * the driver: the same single file Spark's schema inference reads
+    * (inference is on whenever no schema is given, and it reads that
+    * footer in a job of its own on every read). Partition columns are
+    * still discovered from the directory names. A committed file that
+    * is not parquet fails here, loudly, as inference would. */
+  def readCommittedParquet(spark: SparkSession, path: String): Option[DataFrame] =
+    firstDataFile(spark, path).map { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration))
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      // Spark-written files carry their Spark schema; foreign ones are
+      // converted from the parquet schema under the session's settings
+      val schema = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+      spark.read.schema(schema).parquet(path)
+    }
 
   /** All committed data files under `path`, recursively (partition
     * subdirectories included), as full paths sorted for deterministic

@@ -1194,12 +1194,6 @@ object Similarity {
     * windows over components, whose size near-dup structure bounds. */
   def semDedup(corpus: DataFrame, centroids: DataFrame,
                idCol: String, vecCol: String, eps: Double): DataFrame = {
-    // the assignment feeds three consumers, but NO materialization:
-    // unlike the shingle table (where column pruning rewrites each
-    // consumer's subtree differently and kills ReuseExchange), every
-    // consumer here needs the same (id, v, n2, cell, cs) projection,
-    // so ReuseExchange already shares the ranked-cells window —
-    // A/B-measured at sf0.1: 2.41 s both ways (TimeQuery, min-of-3)
     semDedupTail(assignCellsScored(corpus, centroids, idCol, vecCol), eps)
   }
 
@@ -1250,9 +1244,14 @@ object Similarity {
   /** The cell-blocked dedup tail shared by semDedup (flat assignment)
     * and hierarchicalSemDedupAuto (two-level assignment): within-cell
     * >= eps pairs, connected components, the lowest-centroid-sim keep
-    * rule. `asg` is (id, v, n2, cell, cs). */
-  private def semDedupTail(asg: DataFrame, eps: Double,
+    * rule. `asg0` is (id, v, n2, cell, cs). */
+  private def semDedupTail(asg0: DataFrame, eps: Double,
                            blockCols: Seq[String] = Seq("cell")): DataFrame = {
+    // pinned once: the pair generation runs in connectedComponents'
+    // own collect job, and the member/keeper joins below run in the
+    // caller's — without the pin each re-plans and re-runs the
+    // assignment (ReuseExchange only shares within one plan)
+    val asg = Dedup.DefaultMaterialize(asg0)
     val pairs = asg.select((Seq(col("id").as("id_a"), col("v").as("va"),
         col("n2").as("na")) ++ blockCols.map(col)): _*)
       .join(asg.select((Seq(col("id").as("id_b"), col("v").as("vb"),

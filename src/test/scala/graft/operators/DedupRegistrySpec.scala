@@ -107,4 +107,17 @@ class DedupRegistrySpec extends SparkSpec {
     }
     assert(RegistryIO.committedDataExists(spark, foreign))
   }
+
+  test("read takes its schema from one committed footer on the driver: " +
+    "no job") {
+    val dir = Files.createTempDirectory("graft_reg_").toString + "/reg"
+    val reg = new DedupRegistry(dir)
+    reg.dedupAppend(Seq((1L, "doc A"), (2L, "doc B")).toDF("doc_id", "text"),
+      "doc_id", md5(col("text")))
+    var fps: org.apache.spark.sql.DataFrame = null
+    assert(org.apache.spark.JobsSubmitted.during(spark.sparkContext) {
+      fps = reg.read(spark)
+    } == 0)
+    assert(fps.columns.toSeq == Seq("fp") && fps.count() == 2)
+  }
 }

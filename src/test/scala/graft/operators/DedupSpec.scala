@@ -105,6 +105,32 @@ class DedupSpec extends SparkSpec {
     val out = Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    assert(Dedup.connectedComponents(pairs).schema ==
+      Dedup.connectedComponentsLoop(pairs).schema)
+  }
+
+  test("connectedComponents submits as many jobs for a 2-node graph as " +
+    "for a 40-node shuffled chain (no job per propagation round)") {
+    def jobs(es: Seq[(Long, Long)]): Int = {
+      val pairs = es.toDF("id_a", "id_b").repartition(3)
+      org.apache.spark.JobsSubmitted.during(spark.sparkContext) {
+        Dedup.connectedComponents(pairs).collect()
+      }
+    }
+    val chain = new scala.util.Random(7).shuffle((0L until 39L).map(i => (i, i + 1)))
+    assert(jobs(Seq((1L, 2L))) == jobs(chain))
+  }
+
+  test("connectedComponents above the edge cap runs the distributed " +
+    "fixpoint, with the same labels") {
+    val n = Dedup.LocalEdgeCap + 1
+    val pairs = spark.range(n)
+      .select((col("id") * 2).as("id_a"), (col("id") * 2 + 1).as("id_b"))
+    val out = Dedup.connectedComponents(pairs)
+    assert(!out.isLocal, "above the cap the labels must come from the loop")
+    assert(out.count() == 2L * n)
+    assert(out.filter(col("cluster") =!= col("id") - col("id") % 2).isEmpty)
+    assert(Dedup.connectedComponents(pairs.limit(10)).isLocal)
   }
 
   test("connectedComponentsStar matches the fixpoint variant on random graphs") {

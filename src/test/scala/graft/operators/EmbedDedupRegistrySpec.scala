@@ -386,4 +386,26 @@ class EmbedDedupRegistrySpec extends SparkSpec {
       assert(pruned.nonEmpty)
     }
   }
+
+  test("read takes its schema from one committed footer on the driver " +
+    "(no job); a committed file lacking vq still fails loudly") {
+    val base = Files.createTempDirectory("graft_ereg_").toString
+    val reg = new EmbedDedupRegistry(base + "/reg", epsPermille = 980)
+    reg.dedupAppend(Seq((1L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
+        (9L, Array(0.0f, 1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding"),
+      cents, "vec_id", "embedding")
+    var sigs: org.apache.spark.sql.DataFrame = null
+    assert(org.apache.spark.JobsSubmitted.during(spark.sparkContext) {
+      sigs = reg.read(spark)
+    } == 0)
+    assert(sigs.columns.toSeq == Seq("id", "vq", "nq", "cell") && sigs.count() == 2)
+
+    // the staging tier of a never-pinned registry holds a committed
+    // file without vq: corruption, not emptiness
+    Seq((1L, 1L, 0L)).toDF("id", "nq", "cell").write.parquet(base + "/bad_staged")
+    val e = intercept[IllegalArgumentException] {
+      new EmbedDedupRegistry(base + "/bad", epsPermille = 980).read(spark)
+    }
+    assert(e.getMessage.contains("vq"))
+  }
 }

@@ -2,7 +2,7 @@
 """Paired A/B runs of the repo benchmark: a parent revision against the
 working tree.
 
-    python3 tools/ab_perfbench.py <parent-rev> <workload> <pairs> [--seed N]
+    python3 tools/ab_perfbench.py <parent-rev> <workload> <pairs> [--seed N] [--trace]
 
 Run from the root of a checkout. The parent revision is exported with
 `git archive` into a temporary directory; each pair then runs
@@ -18,6 +18,12 @@ whether a gain could be claimed on it: the change wins at least 9/10 of
 the pairs and the medians differ by more than the parent's
 interquartile distance. Every run must report `correct`; a pair with a
 run that does not is listed and counts as a loss.
+
+With --trace, one traced run per side follows the pairs (the first
+pair's seed), and its per-layer metrics print side by side, with the
+notes' quality figures and each plain cycle's job count from the span
+file, so a claim shows which layer moved. Metrics both sides report
+as 0 (layers the workload does not run) are left out.
 """
 import argparse
 import json
@@ -29,9 +35,10 @@ import sys
 import tempfile
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace=False):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds),
+           "--trace", "1" if trace else "0"]
     r = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = [ln for ln in r.stdout.splitlines() if ln.strip()]
     try:
@@ -39,7 +46,42 @@ def run_once(checkout, workload, seed, seconds):
     except (IndexError, ValueError):
         sys.stderr.write(r.stderr[-2000:])
         return {"correct": False, "metrics": {}}
+    notes = [ln[len("notes "):] for ln in lines if ln.startswith("notes ")]
+    out["notes"] = json.loads(notes[-1]) if notes else {}
     return out
+
+
+def plain_cycle_jobs(checkout, workload, seed):
+    """Jobs of each plain traced cycle: a `cycle` span with no child
+    spans (a pinned cycle opens one span per layer under it)."""
+    path = os.path.join(checkout, "perfbench", "traces", f"{workload}-seed{seed}.jsonl")
+    try:
+        with open(path) as fh:
+            spans = [json.loads(ln) for ln in fh if ln.strip()]
+    except OSError:
+        return []
+    parents = {s["parent"] for s in spans}
+    return [s["jobs"] for s in spans if s["name"] == "cycle" and s["id"] not in parents]
+
+
+def traced_comparison(sides, workload, seed, seconds, layer_names):
+    outs = {side: run_once(sides[side], workload, seed, seconds, trace=True)
+            for side in ("parent", "change")}
+    print(f"\ntraced run, seed {seed}: correct parent={outs['parent'].get('correct')} "
+          f"change={outs['change'].get('correct')}")
+    print(f"  {'metric':28s} {'parent':>12s} {'change':>12s}")
+    for name in layer_names:
+        vals = [outs[s]["metrics"].get(name, {}).get("value") for s in ("parent", "change")]
+        if any(v for v in vals):
+            print(f"  {name:28s} " + " ".join(
+                f"{v:12.4g}" if v is not None else f"{'-':>12s}" for v in vals))
+    for name in ("dup_recall", "unique_kept_frac"):
+        vals = [outs[s]["notes"].get(name) for s in ("parent", "change")]
+        if any(v is not None for v in vals):
+            print(f"  {name:28s} " + " ".join(
+                f"{v:12.4g}" if v is not None else f"{'-':>12s}" for v in vals))
+    for side in ("parent", "change"):
+        print(f"  plain-cycle jobs, {side}: {plain_cycle_jobs(sides[side], workload, seed)}")
 
 
 def quartiles(xs):
@@ -55,6 +97,8 @@ def main():
     p.add_argument("workload")
     p.add_argument("pairs", type=int)
     p.add_argument("--seed", type=int, default=1)
+    p.add_argument("--trace", action="store_true",
+                   help="after the pairs, one traced run per side, per-layer metrics side by side")
     a = p.parse_args()
 
     root = os.getcwd()
@@ -102,6 +146,9 @@ def main():
                   f" | change wins {wins}/{a.pairs}"
                   f" | median change {100 * (cq[1] - pq[1]) / pq[1] if pq[1] else 0:+.1f}%"
                   f" | gain {'holds' if gain else 'not shown'}")
+        if a.trace:
+            traced_comparison(sides, a.workload, a.seed, seconds,
+                              [m["name"] for m in bench["per_layer"]])
         return 0
     finally:
         shutil.rmtree(parent, ignore_errors=True)
