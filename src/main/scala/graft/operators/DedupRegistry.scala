@@ -46,26 +46,9 @@ class DedupRegistry(path: String, nBuckets: Int = 8) {
   /** Where the active generation's files live (for specs/tools). */
   def indexLocation(spark: SparkSession): String = index.activeLocation(spark)
 
-  def read(spark: SparkSession): DataFrame = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL("fp STRING"))
-    // Never-committed (absent, or only _temporary from a crashed
-    // first append) is the ONLY case treated as empty — the shared
-    // RegistryIO policy. A registry with committed data that cannot
-    // be read as (fp STRING) is corruption: forgetting the whole
-    // dedup history and silently re-admitting duplicates is the
-    // worst possible failure mode, so schema errors propagate
-    // (ADVICE r4, same rule as NearDupRegistry.read).
-    val loc = indexLocation(spark)
-    RegistryIO.readCommittedParquet(spark, loc).fold(empty) { d =>
-      require(d.columns.contains("fp"),
-        s"DedupRegistry at $loc exists but has no 'fp' column " +
-          s"(found: ${d.columns.mkString(", ")}) — refusing to treat " +
-          "a corrupt registry as empty")
-      d.select("fp")
-    }
-  }
+  def read(spark: SparkSession): DataFrame =
+    RegistryIO.readCommitted(spark, indexLocation(spark),
+      org.apache.spark.sql.types.StructType.fromDDL("fp STRING")).select("fp")
 
   /** Maintenance: rewrite the fingerprint index into ~nBuckets files
     * when per-batch appends have fragmented it past `maxFiles`.

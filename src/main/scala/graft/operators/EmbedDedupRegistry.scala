@@ -176,24 +176,6 @@ class EmbedDedupRegistry(path: String, epsPermille: Int) {
     (fp, rows.head.getSeq[Float](1).length)
   }
 
-  /** Registry signatures, or empty before the first COMMITTED append
-    * (the shared RegistryIO policy — a crashed first append's
-    * _temporary-only dir is still "never written", and the
-    * documented replay contract must be able to run). A registry
-    * with committed data that cannot be read is corruption and
-    * propagates (the fail-loudly rule: forgetting semantic history
-    * re-admits every near-dup). */
-  /** One tier's raw frame (schema-checked), or None when never
-    * committed. */
-  private def readTierRaw(spark: SparkSession, d: String): Option[DataFrame] =
-    RegistryIO.readCommittedParquet(spark, d).map { t =>
-      val missing = Seq("id", "vq", "nq", "cell").filterNot(t.columns.contains)
-      require(missing.isEmpty,
-        s"EmbedDedupRegistry at $d exists but lacks ${missing.mkString(", ")} " +
-          "— refusing to treat a corrupt registry as empty")
-      t
-    }
-
   /** Signature projection shared by the tiers: legacy generations
     * partitioned by raw cell read it back as a (possibly INT)
     * partition column; current ones carry it as a data column —
@@ -201,19 +183,20 @@ class EmbedDedupRegistry(path: String, epsPermille: Int) {
   private def sigCols(t: DataFrame): DataFrame =
     t.select(col("id"), col("vq"), col("nq"), col("cell").cast("long"))
 
-  private def emptySigs(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "id BIGINT, vq ARRAY<INT>, nq BIGINT, cell BIGINT"))
+  private val SigSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id BIGINT, vq ARRAY<INT>, nq BIGINT, cell BIGINT")
+
+  /** One tier's stored rows (the shared committed-state read: empty
+    * before the first committed append, a committed file lacking a
+    * signature column fails loudly). */
+  private def readTier(spark: SparkSession, d: String): DataFrame =
+    RegistryIO.readCommitted(spark, d, SigSchema)
 
   def read(spark: SparkSession): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = activeDir(fs)
-    val tiers = Seq(readTierRaw(spark, dir),
-      readTierRaw(spark, stagingDir(dir))).flatten.map(sigCols)
-    if (tiers.isEmpty) emptySigs(spark) else tiers.reduce(_ unionAll _)
+    sigCols(readTier(spark, dir)) unionAll sigCols(readTier(spark, stagingDir(dir)))
   }
 
   /** The PROBE-shaped read: only the given cells' signatures, with
@@ -228,13 +211,11 @@ class EmbedDedupRegistry(path: String, epsPermille: Int) {
     val dir = activeDir(fs)
     val bks = cells.map(c => ((c % DirBuckets) + DirBuckets) % DirBuckets)
       .distinct
-    val main = readTierRaw(spark, dir).map { t =>
-      if (t.columns.contains("cellb")) t.filter(col("cellb").isin(bks: _*))
-      else t
-    }
-    val tiers = (main.toSeq ++ readTierRaw(spark, stagingDir(dir)).toSeq)
-      .map(t => sigCols(t).filter(col("cell").isin(cells: _*)))
-    if (tiers.isEmpty) emptySigs(spark) else tiers.reduce(_ unionAll _)
+    val main = readTier(spark, dir)
+    val pruned = if (main.columns.contains("cellb")) main.filter(col("cellb").isin(bks: _*))
+      else main
+    Seq(pruned, readTier(spark, stagingDir(dir)))
+      .map(t => sigCols(t).filter(col("cell").isin(cells: _*))).reduce(_ unionAll _)
   }
 
   /** Fold the staging tier into a fresh cell-PARTITIONED generation
@@ -304,7 +285,9 @@ class EmbedDedupRegistry(path: String, epsPermille: Int) {
     val tiers = byDir.filter(_._2.nonEmpty).map { case (d, files) =>
       sigCols(spark.read.option("basePath", d).parquet(files: _*))
     }
-    if (tiers.isEmpty) emptySigs(spark) else tiers.reduce(_ unionAll _)
+    if (tiers.isEmpty) spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), SigSchema)
+    else tiers.reduce(_ unionAll _)
   }
 
   /** The shared generation cutover (refit + compactStaging — review:
@@ -462,15 +445,11 @@ class EmbedDedupRegistry(path: String, epsPermille: Int) {
           // full-row anti-join against the store already built makes
           // the re-absorb insert nothing.
           val absorbed = migrate(sigsOfFiles(spark, Seq(d -> stragglers)))
-          // committedDataExists guard (review r10): a migration that
-          // filtered every row leaves newDir with no parquet footers,
-          // and a bare read would throw "Unable to infer schema"
-          // mid-cutover; an empty store absorbs everything anyway
-          val built =
-            if (RegistryIO.committedDataExists(spark, newDir))
-              spark.read.parquet(newDir)
-                .select(absorbed.columns.map(col): _*)
-            else absorbed.limit(0)
+          // a migration that filtered every row leaves newDir with no
+          // committed file: the shared read answers empty there, and an
+          // empty store absorbs everything anyway
+          val built = RegistryIO.readCommitted(spark, newDir, absorbed.schema)
+            .select(absorbed.columns.map(col): _*)
           val cond = absorbed.columns
             .map(c => absorbed(c) <=> built(c)).reduce(_ && _)
           writeTo(absorbed.join(built, cond, "left_anti"), "append")

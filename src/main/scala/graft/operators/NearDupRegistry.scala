@@ -164,19 +164,10 @@ class NearDupRegistry(path: String, numPerm: Int, bands: Int,
     index.compact(spark, maxFiles)
   }
 
-  def read(spark: SparkSession): DataFrame = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, sig ARRAY<BIGINT>"))
-    // Never-committed is the ONLY silent-empty case (first run, or a
-    // crashed first append's _temporary-only dir — the shared
-    // RegistryIO policy); a registry with committed data but a
-    // wrong/missing column must fail loudly, not forget the whole
-    // dedup history (ADVICE r4) — so schema errors from the select
-    // below propagate.
-    if (!RegistryIO.committedDataExists(spark, path)) empty
-    else spark.read.parquet(path).select(col("id"), guardedSig(col("sig")))
-  }
+  def read(spark: SparkSession): DataFrame =
+    RegistryIO.readCommitted(spark, path, org.apache.spark.sql.types.StructType
+      .fromDDL("id BIGINT, sig ARRAY<BIGINT>"))
+      .select(col("id"), guardedSig(col("sig")))
 
   /** A registry/index written with a different numPerm must fail
     * loudly, not silently estimate with mixed permutations (the

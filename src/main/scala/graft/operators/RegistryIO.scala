@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -50,24 +50,46 @@ object RegistryIO {
     if (fs.exists(p)) scan(p) else None
   }
 
-  /** Committed parquet data at `path`, or None when never committed.
-    * The read schema comes from ONE committed file's footer, read on
-    * the driver: the same single file Spark's schema inference reads
-    * (inference is on whenever no schema is given, and it reads that
-    * footer in a job of its own on every read). Partition columns are
-    * still discovered from the directory names. A committed file that
-    * is not parquet fails here, loudly, as inference would. */
-  def readCommittedParquet(spark: SparkSession, path: String): Option[DataFrame] =
-    firstDataFile(spark, path).map { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration))
-      val meta = try reader.getFooter.getFileMetaData finally reader.close()
-      // Spark-written files carry their Spark schema; foreign ones are
-      // converted from the parquet schema under the session's settings
-      val schema = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
-      spark.read.schema(schema).parquet(path)
+  /** THE read of committed state: every registry, state table and
+    * log reads through here. A path that was never committed to
+    * (absent, or holding only `_temporary`/markers) reads as an empty
+    * frame typed by `schema`; that is the only silent-empty case. A
+    * committed path is read with the schema of ONE committed file's
+    * footer, read on the driver: the single footer Spark's inference
+    * would read in a job of its own on every read. Partition columns
+    * are still discovered from the directory names. A committed first
+    * file that lacks a column of `schema` (its own columns or its
+    * partition directories) throws, naming the path and the missing
+    * columns, and a committed file that is not parquet fails loudly
+    * too: state read as empty forgets its history.
+    *
+    * Columns in `optional` may be missing from committed files; they
+    * read as null, so such a read uses `schema` itself rather than the
+    * footer's (a file written before a column was added). */
+  def readCommitted(spark: SparkSession, path: String, schema: StructType,
+                    optional: Set[String] = Set.empty): DataFrame =
+    firstDataFile(spark, path) match {
+      case None =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      case Some(f) =>
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration))
+        val meta = try reader.getFooter.getFileMetaData finally reader.close()
+        // Spark-written files carry their Spark schema; foreign ones are
+        // converted from the parquet schema under the session's settings
+        val footer = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+          .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+        val partitionCols = Iterator.iterate(f.getPath.getParent)(_.getParent)
+          .takeWhile(d => d != null && d.getName.contains("="))
+          .map(_.getName.takeWhile(_ != '=')).toSet
+        val found = footer.fieldNames.toSet ++ partitionCols
+        val missing = schema.fieldNames.filterNot(c => optional(c) || found(c))
+        require(missing.isEmpty,
+          s"committed state at $path lacks ${missing.mkString(", ")} " +
+            s"(found: ${found.toSeq.sorted.mkString(", ")}) — refusing to " +
+            "treat corrupt state as empty")
+        spark.read.schema(if (optional.isEmpty) footer else schema).parquet(path)
     }
 
   /** All committed data files under `path`, recursively (partition

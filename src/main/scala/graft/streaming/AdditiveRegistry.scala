@@ -53,8 +53,12 @@ object AdditiveRegistry {
     if (h == null) -1L else h.asInstanceOf[Long]
   }
 
-  private def readAll(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Every stored cell: `like`'s columns plus the batch_id partition,
+    * through the shared committed-state read (empty, typed, before the
+    * first committed batch). */
+  private def readAll(spark: SparkSession, path: String, like: DataFrame): DataFrame =
+    graft.operators.RegistryIO.readCommitted(spark, path,
+        like.schema.add("batch_id", org.apache.spark.sql.types.LongType))
       .withColumn("batch_id", col("batch_id").cast("long"))
 
   /** Valid cells under horizon h: the base encoding h plus every
@@ -65,17 +69,12 @@ object AdditiveRegistry {
 
   /** The folded registry: key-wise sum of the newest base plus every
     * live partition above its horizon (the merge law of whatever
-    * sketch the cells encode). `like` supplies the typed EMPTY result
-    * for a never-committed path (review: a probe racing the stream's
-    * first batch used to throw PATH_NOT_FOUND where the membership
-    * family's readOrEmpty bootstrap returns empty — same discipline
-    * here; the schema is the family's to declare, not inferable from
-    * a directory that does not exist). */
+    * sketch the cells encode). `like` declares the cells' schema: a
+    * never-committed path folds to an empty frame of it (a probe
+    * racing the stream's first batch reads empty, not PATH_NOT_FOUND). */
   def fold(spark: SparkSession, path: String, keys: Seq[String],
            valueCol: String, like: DataFrame): DataFrame = {
-    if (!graft.operators.RegistryIO.committedDataExists(spark, path))
-      return like.limit(0)
-    val all = readAll(spark, path)
+    val all = readAll(spark, path, like)
     valid(all, horizon(all))
       .groupBy(keys.map(col): _*).agg(sum(valueCol).as(valueCol))
   }
@@ -93,9 +92,7 @@ object AdditiveRegistry {
   def foldBefore(spark: SparkSession, path: String, keys: Seq[String],
                  valueCol: String, like: DataFrame,
                  beforeBatchId: Long): DataFrame = {
-    if (!graft.operators.RegistryIO.committedDataExists(spark, path))
-      return like.limit(0)
-    val all = readAll(spark, path)
+    val all = readAll(spark, path, like)
     val h = horizon(all)
     def unreconstructable(atHorizon: Long) =
       s"AdditiveRegistry.foldBefore: horizon $atHorizon absorbed batches " +
@@ -130,11 +127,11 @@ object AdditiveRegistry {
       catch {
         case e: Throwable if causedByMissingFile(e) =>
           throw new IllegalStateException(
-            unreconstructable(horizon(readAll(spark, path))) +
+            unreconstructable(horizon(readAll(spark, path, like))) +
               " (a concurrent compact() GC'd absorbed partitions " +
               "mid-fold)", e)
       }
-    val h2 = horizon(readAll(spark, path))
+    val h2 = horizon(readAll(spark, path, like))
     require(h2 < beforeBatchId, unreconstructable(h2) +
       " (a compact() crossed the boundary while this fold was scanning)")
     folded
@@ -165,7 +162,10 @@ object AdditiveRegistry {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.operators.RegistryIO.withMaintenanceLock(lockFs,
       path + "_maint_lock", s"AdditiveRegistry($path).compact") {
-    val all = readAll(spark, path)
+    // compaction folds committed cells only: a never-committed
+    // registry has no cell schema to fold and fails here, loudly
+    val all = spark.read.parquet(path)
+      .withColumn("batch_id", col("batch_id").cast("long"))
     val h = horizon(all)
     require(upToBatchId > h,
       s"AdditiveRegistry.compact: upToBatchId=$upToBatchId must exceed " +

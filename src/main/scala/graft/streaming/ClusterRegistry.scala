@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, RegistryIO}
 
 /** Streaming cluster registry: a persistent (id, cluster) labeling
   * maintained across micro-batches of near-dup EDGES — the streaming
@@ -32,21 +32,15 @@ object ClusterRegistry {
                         bCol: String = "id_b")(
       batch: DataFrame, batchId: Long): Unit = {
     val edges = batch.select(col(aCol), col(bCol))
-    val template = edges.select(col(aCol).cast("long").as("id"))
-      .withColumn("cluster", col("id"))
-    val standing = ParquetState.readOrEmpty(path, template)
-      .select("id", "cluster")
-    val updated = Dedup.connectedComponentsIncremental(standing, edges, aCol, bCol)
+    val updated = Dedup.connectedComponentsIncremental(
+      clusters(batch.sparkSession, path), edges, aCol, bCol)
     ParquetState.pinAndOverwrite(updated, path)
   }
 
-  /** The standing labeling — empty (typed) before the first batch,
-    * as documented: the readOrEmpty bootstrap the merge path already
-    * uses (review: a bare parquet read threw PATH_NOT_FOUND when a
-    * monitor called this before the first micro-batch committed). */
-  def clusters(spark: SparkSession, path: String): DataFrame = {
-    val template = spark.range(0)
-      .select(col("id").as("id"), col("id").as("cluster"))
-    ParquetState.readOrEmpty(path, template).select("id", "cluster")
-  }
+  /** The standing labeling — empty (typed) before the first batch;
+    * the merge path folds each batch into it. */
+  def clusters(spark: SparkSession, path: String): DataFrame =
+    RegistryIO.readCommitted(spark, path,
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, cluster BIGINT"))
+      .select("id", "cluster")
 }

@@ -63,7 +63,7 @@ object CmsRegistry {
   /** The folded sketch: cell-wise sum of the newest base plus every
     * live partition above its horizon (the CMS merge law, same as
     * q161's merge_law_ok). Empty (typed) before the first committed
-    * batch — the readOrEmpty bootstrap discipline. */
+    * batch — the shared committed-state read. */
   def sketch(spark: SparkSession, path: String): DataFrame =
     AdditiveRegistry.fold(spark, path, Keys, "cell",
       spark.range(0).select(col("id").cast("int").as("i"),

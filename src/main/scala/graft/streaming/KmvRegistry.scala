@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{BottomKDistinctAggregator, Text}
+import graft.operators.RegistryIO
 
 /** Streaming KMV registry: one bottom-k-distinct content sketch per
   * source, folded incrementally from document micro-batches — the
@@ -51,12 +52,12 @@ object KmvRegistry {
     // is biased and estimates permanently undercount. Raising OR
     // lowering k on a lived-in registry now fails loudly.
     val pp = new org.apache.hadoop.fs.Path(path + "_params")
-    graft.operators.RegistryIO.pinParams(
+    RegistryIO.pinParams(
       pp.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration),
       pp.toString, s"k=$k", "KmvRegistry")
     val sketches = batchSketches(batch, sourceCol, textCol, k)
     val empty = array().cast("array<bigint>")
-    val merged = ParquetState.readOrEmpty(path, sketches)
+    val merged = RegistryIO.readCommitted(batch.sparkSession, path, sketches.schema)
       .select(col("source"), col("sketch").as("old_sk"))
       .join(sketches.select(col("source"), col("sketch").as("new_sk")),
         Seq("source"), "full_outer")

@@ -3,23 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 
 /** Shared scaffold for foreachBatch sinks that maintain a parquet
-  * state table (SnapshotMerge's row snapshot, SketchRegistry's sketch
-  * registry): read-or-empty bootstrap + the pin-before-overwrite
-  * rule, in ONE place so a fix to either lands in both. */
+  * state table (SnapshotMerge's row snapshot, the Sketch/Kmv/Cluster
+  * registries): they read it through graft.operators.RegistryIO's
+  * committed-state read and write it back through the
+  * pin-before-overwrite rule below, in ONE place. */
 private[streaming] object ParquetState {
-
-  /** The state table at `path`, or an empty frame with `like`'s
-    * schema before the first batch has COMMITTED anything (the
-    * shared graft.operators.RegistryIO policy — a crashed first
-    * write's _temporary-only dir is still "never written"). A state
-    * table with committed data that cannot be read is corruption and
-    * propagates: silently restarting from empty state would re-emit
-    * every alert / forget every sketch (ADVICE r4). */
-  def readOrEmpty(path: String, like: DataFrame): DataFrame = {
-    val spark = like.sparkSession
-    if (!graft.operators.RegistryIO.committedDataExists(spark, path)) like.limit(0)
-    else spark.read.parquet(path)
-  }
 
   /** Pin PRE-write state, then overwrite: a plan that reads the path
     * it is about to replace must materialize first (the README

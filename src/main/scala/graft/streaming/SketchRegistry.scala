@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.operators.RegistryIO
 
 /** Streaming MinHash registry: one signature per source, folded
   * incrementally from document micro-batches — the streaming face of
@@ -51,7 +52,7 @@ object SketchRegistry {
     // mixed-permutation signature that estimates nothing.
     val lenOk = (col("old_sig").isNull || size(col("old_sig")) === numPerm) &&
       (col("new_sig").isNull || size(col("new_sig")) === numPerm)
-    val merged = ParquetState.readOrEmpty(path, sigs)
+    val merged = RegistryIO.readCommitted(batch.sparkSession, path, sigs.schema)
       .select(col("source"), col("sig").as("old_sig"))
       .join(sigs.select(col("source"), col("sig").as("new_sig")),
         Seq("source"), "full_outer")

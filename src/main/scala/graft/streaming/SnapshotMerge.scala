@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.Merge
+import graft.operators.{Merge, RegistryIO}
 
 /** Streaming table maintenance: apply each micro-batch of CDC changes
   * onto a parquet snapshot with the batch MERGE operator — the
@@ -28,7 +28,8 @@ object SnapshotMerge {
                        (batch: DataFrame, batchId: Long): Unit = {
     // first batch: no snapshot yet — empty target with the changes'
     // value schema
-    val target = ParquetState.readOrEmpty(path, batch.drop(opCol))
+    val target = RegistryIO.readCommitted(batch.sparkSession, path,
+      batch.drop(opCol).schema)
     ParquetState.pinAndOverwrite(
       Merge.upsert(target, batch, keys, opCol, deleteOp).drop("action"),
       path)

@@ -1,67 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** An alert candidate flowing through the streaming pipeline
-  * (the reference's notification rows, arbitrage_scanner.py:478-489). */
-case class Alert(team: String, ts: java.sql.Timestamp, message: String)
 
 /** Structured Streaming re-expressions of the reference's
   * streaming-shaped behaviors (SURVEY.md §2.11):
   *
-  *  - the ≤N-notifications-per-(team, day) rule
-  *    (arbitrage_scanner.py:434-461): the batch version reads the
-  *    whole notification log back per run; here it is
-  *    flatMapGroupsWithState keyed by (team, day) with a counter and
-  *    an event-time timeout at day end + watermark slack, so state is
-  *    bounded by |active (team, day)| and cleans itself — no log scan,
-  *    no unbounded growth at any scale.
   *  - watermarked tumbling-window aggregation over event time (the
   *    generalized "scores feed" shape; late rows beyond the watermark
   *    are dropped deterministically).
   *  - exactly-once-style dedup within a watermark
   *    (bovada_pull.py:156-162's second-matchup removal, streaming-native).
+  *  - sessionization, interval joins, CDC compaction and near-dup
+  *    removal within a watermark.
+  *
+  * The ≤N-notifications-per-(team, day) rule is not here: a stream
+  * applies sinks.NotificationLog.rateLimitAndAppend per micro-batch.
   */
 object StreamOps {
-
-  val MsPerDay: Long = 24L * 3600 * 1000
-
-  /** Emit at most `maxPerDay` alerts per (team, UTC day), in event-time
-    * order within each micro-batch. State: the count emitted so far;
-    * expires (event-time timeout) once the watermark passes day end,
-    * so only currently-active days hold state.
-    *
-    * Requires an upstream withWatermark on `ts`.
-    */
-  def rateLimitedAlerts(alerts: Dataset[Alert], maxPerDay: Int): Dataset[Alert] = {
-    import alerts.sparkSession.implicits._
-    alerts
-      .groupByKey(a => (a.team, a.ts.getTime / MsPerDay))
-      .flatMapGroupsWithState[Int, Alert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case ((_, day), rows, state: GroupState[Int]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sent = state.getOption.getOrElse(0)
-            val take = rows.toSeq.sortBy(_.ts.getTime).take(math.max(0, maxPerDay - sent))
-            state.update(sent + take.size)
-            // drop state once the watermark passes the end of this
-            // day — CLAMPED past the current watermark (the
-            // FunnelState guard, review): a valid on-time row for a
-            // day whose end the eviction watermark already passed
-            // would otherwise set a timeout in the past, which
-            // Spark >= 3.4 rejects with an IllegalArgumentException
-            // that kills the query and crash-loops the restart
-            // (replay recreates the same batch). The clamp only makes
-            // the state's removal LATER, never its emission.
-            state.setTimeoutTimestamp(math.max((day + 1) * MsPerDay,
-              state.getCurrentWatermarkMs() + 1))
-            take.iterator
-          }
-      }
-  }
 
   /** Tumbling-window counts per key with a watermark: the canonical
     * event-time aggregation. Output in Append mode finalizes a window

@@ -75,39 +75,6 @@ class DedupRegistrySpec extends SparkSpec {
       "doc_id", fp).count() == 1)
   }
 
-  test("read: never-written path is empty; corrupt registry fails loudly") {
-    val base = Files.createTempDirectory("graft_reg_").toString
-    assert(new DedupRegistry(base + "/never_written").read(spark).count() == 0)
-
-    // a registry that EXISTS but lacks the fp column is corruption,
-    // not emptiness — forgetting history re-admits every duplicate
-    val corrupt = base + "/corrupt"
-    Seq((1L, "x")).toDF("id", "payload").write.parquet(corrupt)
-    intercept[IllegalArgumentException] {
-      new DedupRegistry(corrupt).read(spark)
-    }
-
-    // a crashed FIRST append leaves only _temporary: the registry
-    // was never committed to, so this is emptiness (the documented
-    // replay contract must be able to run), not corruption
-    val crashed = base + "/crashed"
-    new java.io.File(crashed + "/_temporary/0").mkdirs()
-    assert(new DedupRegistry(crashed).read(spark).count() == 0)
-
-    // data files NOT named part-* (another tool wrote or compacted
-    // the registry) are still committed data (ADVICE r5): the foreign
-    // file must be READ — here it has the right schema and simply
-    // works; treating it as never-committed would silently forget
-    // the dedup history
-    val foreign = base + "/foreign"
-    Seq((1L, "abc")).toDF("id", "fp").write.parquet(foreign)
-    val dir = new java.io.File(foreign)
-    dir.listFiles.filter(_.getName.startsWith("part-")).foreach { f =>
-      assert(f.renameTo(new java.io.File(foreign + "/compacted-0.parquet")))
-    }
-    assert(RegistryIO.committedDataExists(spark, foreign))
-  }
-
   test("read takes its schema from one committed footer on the driver: " +
     "no job") {
     val dir = Files.createTempDirectory("graft_reg_").toString + "/reg"

@@ -190,20 +190,6 @@ class NearDupRegistrySpec extends SparkSpec {
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L))
   }
 
-  test("an existing registry with a broken schema fails loudly, not as empty") {
-    // ADVICE r4: a catch-all around read() treated a corrupt registry
-    // as first-run-empty, silently forgetting the whole dedup history.
-    val dir = java.nio.file.Files.createTempDirectory("neardup_reg5").toString + "/reg"
-    Seq((1L, "not a signature")).toDF("id", "wrong_col")
-      .write.parquet(dir)
-    intercept[org.apache.spark.sql.AnalysisException] {
-      reg(dir).read(spark).collect()
-    }
-    // while a genuinely missing path is still the empty first run
-    val fresh = java.nio.file.Files.createTempDirectory("neardup_reg6").toString + "/nope"
-    assert(reg(fresh).read(spark).isEmpty)
-  }
-
   test("index compaction is invisible to probes and survives new instances") {
     // VERDICT r5 #8: per-batch appends fragment the band index into
     // one file group per dedupAppend; compaction must rewrite it into

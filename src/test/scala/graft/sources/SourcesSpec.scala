@@ -91,4 +91,41 @@ class NotificationLogSpec extends SparkSpec {
     assert(all("old1").isEmpty && all("old2").isEmpty)
     assert(all("m3").nonEmpty && all("b1").nonEmpty)
   }
+
+  test("rate limit: quota resets on a new day") {
+    val dir = Files.createTempDirectory("nlog").toFile.getAbsolutePath + "/log"
+    val out = new graft.sinks.NotificationLog(dir).rateLimitAndAppend(
+      Seq(("A", ts(1), "d0a"), ("A", ts(2), "d0b"), ("A", ts(25), "d1a"))
+        .toDF("team", "ts", "message"),
+      maxPerDay = 1)
+    assert(out.select("message").as[String].collect().toSet == Set("d0a", "d1a"))
+  }
+
+  test("rate limit: equal timestamps keep the smaller message, on replay too") {
+    // two of A's three slots are spent; two alerts share the next ts
+    def oneSlotLeft() = {
+      val dir = Files.createTempDirectory("nlog").toFile.getAbsolutePath + "/log"
+      val log = new graft.sinks.NotificationLog(dir)
+      log.rateLimitAndAppend(
+        Seq(("A", ts(1), "m1"), ("A", ts(2), "m2")).toDF("team", "ts", "message"),
+        maxPerDay = 3)
+      log
+    }
+    val tied = Seq(("A", ts(3), "zeta"), ("A", ts(3), "alpha"))
+    val survivors = Seq(tied, tied.reverse).map { alerts =>
+      oneSlotLeft().rateLimitAndAppend(alerts.toDF("team", "ts", "message"),
+        maxPerDay = 3).select("message").as[String].collect().toSeq
+    }
+    assert(survivors == Seq(Seq("alpha"), Seq("alpha")))
+  }
+
+  test("a committed log file without sent_at throws instead of lifting the cap") {
+    val dir = Files.createTempDirectory("nlog").toFile.getAbsolutePath + "/log"
+    Seq(("A", "m1")).toDF("team", "message").write.parquet(dir)
+    val e = intercept[IllegalArgumentException] {
+      new graft.sinks.NotificationLog(dir).rateLimitAndAppend(
+        Seq(("A", ts(1), "m2")).toDF("team", "ts", "message"), maxPerDay = 1)
+    }
+    assert(e.getMessage.contains("sent_at"))
+  }
 }

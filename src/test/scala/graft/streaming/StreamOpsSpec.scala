@@ -9,45 +9,7 @@ class StreamOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(dayMs: Long, h: Int): Timestamp = new Timestamp(dayMs + h * 3600L * 1000)
-  private val day0 = 1700_000_000_000L / StreamOps.MsPerDay * StreamOps.MsPerDay
-
-  test("rateLimitedAlerts: at most N per (team, day), across micro-batches") {
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[Alert]
-    val limited = StreamOps.rateLimitedAlerts(
-      in.toDS().withWatermark("ts", "1 hour").as[Alert], maxPerDay = 3)
-    val q = limited.writeStream.format("memory")
-      .queryName("rl_out").outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: 2 alerts for teamA
-      in.addData(Alert("A", ts(day0, 1), "a1"), Alert("A", ts(day0, 2), "a2"))
-      q.processAllAvailable()
-      // batch 2: 3 more for teamA same day (only 1 may pass), 1 for B
-      in.addData(Alert("A", ts(day0, 3), "a3"), Alert("A", ts(day0, 4), "a4"),
-        Alert("A", ts(day0, 5), "a5"), Alert("B", ts(day0, 5), "b1"))
-      q.processAllAvailable()
-      val out = spark.table("rl_out").as[Alert].collect()
-      val byTeam = out.groupBy(_.team).view.mapValues(_.map(_.message).toSet).toMap
-      assert(byTeam("A") == Set("a1", "a2", "a3")) // quota 3, event-time order
-      assert(byTeam("B") == Set("b1"))
-    } finally q.stop()
-  }
-
-  test("rateLimitedAlerts: quota resets on a new day") {
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[Alert]
-    val limited = StreamOps.rateLimitedAlerts(
-      in.toDS().withWatermark("ts", "1 hour").as[Alert], maxPerDay = 1)
-    val q = limited.writeStream.format("memory")
-      .queryName("rl_day").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(Alert("A", ts(day0, 1), "d0a"), Alert("A", ts(day0, 2), "d0b"),
-        Alert("A", ts(day0 + StreamOps.MsPerDay, 1), "d1a"))
-      q.processAllAvailable()
-      val out = spark.table("rl_day").as[Alert].collect().map(_.message).toSet
-      assert(out == Set("d0a", "d1a"))
-    } finally q.stop()
-  }
+  private val day0 = 1700_000_000_000L / 86400000L * 86400000L
 
   test("windowedCounts finalizes a window after the watermark passes") {
     implicit val sq = spark.sqlContext
