@@ -25,6 +25,8 @@ import org.apache.spark.sql.SparkSession
   *    and exchange — observed 17x slowdown on the dedup pipeline at
   *    sf0.1. The filters are redundant for us: explode drops empty
   *    arrays by itself.
+  *  - fs.file.impl = NioLocalFileSystem: local writes set permission
+  *    bits in-process instead of forking `chmod` per file.
   */
 object GraftSession {
   val ExcludedRules = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
@@ -87,6 +89,8 @@ object GraftSession {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.optimizer.excludedRules", ExcludedRules)
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // no chmod process per written file (see NioLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     )((b, kv) => b.config(kv._1, kv._2))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

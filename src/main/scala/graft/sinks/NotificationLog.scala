@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   *
   * Engine-native representation: an append-mode parquet table (Sheets
   * stays an external mirror per SURVEY). The rate limit is a broadcast
-  * join against the per-(team, day) counts, and `rateLimitAndAppend`
-  * is its one implementation: a stream applies it per micro-batch
-  * through MicroBatchPipeline.
+  * join against the per-(team, day) counts. `NotificationLog.survivors`
+  * is its one implementation as a plan and `rateLimitAndAppend` applies
+  * it to a log: a stream does so per micro-batch through
+  * MicroBatchPipeline, and Engine binds the same plan into its
+  * prepared scan.
   */
 class NotificationLog(path: String) {
 
@@ -27,44 +29,24 @@ class NotificationLog(path: String) {
     graft.operators.RegistryIO.readCommitted(spark, path, NotificationLog.Schema,
       optional = Set("updated_at"))
 
-  /** Counts already sent per (team, UTC day). */
-  def dailyCounts(spark: SparkSession): DataFrame =
-    read(spark).groupBy(col("team"), to_date(col("sent_at")).as("day"))
-      .agg(count(lit(1)).as("sent"))
-
-  /** Batch rate limit (arbitrage_scanner.py:457-459): keep alerts for
-    * (team, day) pairs with fewer than maxPerDay already logged, and
-    * at most the remaining quota per pair (deterministic order by the
-    * `orderCol` column). Appends survivors to the log; returns them.
-    * Alerts schema: team STRING, ts TIMESTAMP, message STRING.
+  /** The batch rate limit applied to this log and recorded in it:
+    * `NotificationLog.survivors` against the log's current rows, then
+    * `append`. Alerts schema: team STRING, ts TIMESTAMP, message STRING.
     */
   def rateLimitAndAppend(alerts: DataFrame, maxPerDay: Int,
                          orderCol: String = "ts",
                          appendedAt: org.apache.spark.sql.Column =
-                           current_timestamp()): DataFrame = {
-    val spark = alerts.sparkSession
-    val withDay = alerts.withColumn("day", to_date(col("ts")))
-    val counts = dailyCounts(spark)
-    // message as tie-break: equal timestamps would otherwise make
-    // row_number nondeterministic, and WHICH alerts survive the cap
-    // (and get appended to the persistent log) could differ on retry.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("team", "day").orderBy(col(orderCol), col("message"))
-    val survivors = withDay
-      .join(broadcast(counts), Seq("team", "day"), "left")
-      .withColumn("sent", coalesce(col("sent"), lit(0L)))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") + col("sent") <= maxPerDay)
-      .select(col("team"), col("ts").as("sent_at"), col("message"),
-        // F27 (arbitrage_scanner.py:509-510): every appended row is
-        // stamped with the append wall-clock rendered in
-        // America/Phoenix — injectable for deterministic tests.
-        graft.functions.Timestamps.phoenixDisplay(appendedAt).as("updated_at"))
-    // Materialize BEFORE the append and CUT the lineage: the
-    // survivors plan READS the log it is about to WRITE (the E3
-    // feedback loop). A plain persist is not enough — writing to the
-    // path recaches plans that scan it (recacheByPath), re-deriving
-    // different counts post-append (SURVEY.md §7 risk 6).
+                           current_timestamp()): DataFrame =
+    append(NotificationLog.survivors(alerts, read(alerts.sparkSession), maxPerDay,
+      orderCol, appendedAt))
+
+  /** Appends `survivors` (a survivors plan over this log's rows) and
+    * returns them pinned. The pin comes BEFORE the append and CUTS the
+    * lineage: the survivors plan READS the log it is about to WRITE
+    * (the E3 feedback loop). A plain persist is not enough — writing to
+    * the path recaches plans that scan it (recacheByPath), re-deriving
+    * different counts post-append (SURVEY.md §7 risk 6). */
+  def append(survivors: DataFrame): DataFrame = {
     val pinned = survivors.localCheckpoint(true)
     pinned.write.mode("append").parquet(path)
     pinned
@@ -76,4 +58,32 @@ object NotificationLog {
   val Schema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(
       "team STRING, sent_at TIMESTAMP, message STRING, updated_at STRING")
+
+  /** The rate limit as a pure plan (arbitrage_scanner.py:457-459): keep
+    * alerts for (team, UTC day) pairs with fewer than maxPerDay rows in
+    * `logRows`, and at most the remaining quota per pair
+    * (deterministic order by the `orderCol` column). Returns the rows
+    * to append: team, sent_at, message, updated_at.
+    */
+  def survivors(alerts: DataFrame, logRows: DataFrame, maxPerDay: Int,
+                orderCol: String = "ts",
+                appendedAt: org.apache.spark.sql.Column = current_timestamp()): DataFrame = {
+    val counts = logRows.groupBy(col("team"), to_date(col("sent_at")).as("day"))
+      .agg(count(lit(1)).as("sent"))
+    // message as tie-break: equal timestamps would otherwise make
+    // row_number nondeterministic, and WHICH alerts survive the cap
+    // (and get appended to the persistent log) could differ on retry.
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("team", "day").orderBy(col(orderCol), col("message"))
+    alerts.withColumn("day", to_date(col("ts")))
+      .join(broadcast(counts), Seq("team", "day"), "left")
+      .withColumn("sent", coalesce(col("sent"), lit(0L)))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") + col("sent") <= maxPerDay)
+      .select(col("team"), col("ts").as("sent_at"), col("message"),
+        // F27 (arbitrage_scanner.py:509-510): every appended row is
+        // stamped with the append wall-clock rendered in
+        // America/Phoenix — injectable for deterministic tests.
+        graft.functions.Timestamps.phoenixDisplay(appendedAt).as("updated_at"))
+  }
 }

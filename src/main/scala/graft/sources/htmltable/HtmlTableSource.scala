@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -15,6 +16,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** S1/S2 "production shape" (SURVEY.md §2.1): a DataSourceV2 that
   * reads saved HTML snapshots of the odds/scores sites as a TABLE —
@@ -87,12 +89,6 @@ object HtmlTableSource {
     .replace("&nbsp;", " ").replace("&lt;", "<").replace("&gt;", ">")
     .replace("&quot;", "\"").replace("&#39;", "'").replace("&amp;", "&")
 
-  private[htmltable] def toConf(m: Map[String, String]): Configuration = {
-    val c = new Configuration(false)
-    m.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
   /** Strip tags, unescape entities, collapse whitespace — bs4
     * `.text.strip()` parity for table cells. */
   def cellText(cellHtml: String): String =
@@ -130,19 +126,19 @@ class HtmlTable(path: String, tableIndex: Int) extends Table with SupportsRead {
       override def description(): String = name()
 
       // the session's Hadoop conf (spark.hadoop.* — credentials,
-      // object-store endpoints, default FS) captured driver-side as a
-      // plain serializable map and rebuilt on executors: a bare
-      // `new Configuration()` would see classpath defaults only. Built
-      // once per scan: partition planning and the reader factory share it.
-      private lazy val hadoopConfMap: Map[String, String] = {
-        import scala.jdk.CollectionConverters._
+      // object-store endpoints, default FS): a bare `new Configuration()`
+      // would see classpath defaults only. Built once per scan; partition
+      // planning reads it on the driver and readers get it through one
+      // broadcast, as Spark's own file sources do.
+      private lazy val hadoopConf: Configuration =
         org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
-          .iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-      }
+      private lazy val sharedConf: Broadcast[SerializableConfiguration] =
+        org.apache.spark.sql.SparkSession.active.sparkContext
+          .broadcast(new SerializableConfiguration(hadoopConf))
 
       override def planInputPartitions(): Array[InputPartition] = {
         val p = new Path(path)
-        val fs = FileSystem.get(p.toUri, HtmlTableSource.toConf(hadoopConfMap))
+        val fs = FileSystem.get(p.toUri, hadoopConf)
         val files =
           if (fs.getFileStatus(p).isDirectory)
             fs.listStatus(p).filter(_.isFile).map(_.getPath)
@@ -153,13 +149,13 @@ class HtmlTable(path: String, tableIndex: Int) extends Table with SupportsRead {
       }
 
       override def createReaderFactory(): PartitionReaderFactory =
-        new HtmlPartitionReaderFactory(hadoopConfMap, required.fieldNames)
+        new HtmlPartitionReaderFactory(sharedConf, required.fieldNames)
     }
 }
 
 case class HtmlFilePartition(path: String, tableIndex: Int) extends InputPartition
 
-class HtmlPartitionReaderFactory(hadoopConf: Map[String, String],
+class HtmlPartitionReaderFactory(hadoopConf: Broadcast[SerializableConfiguration],
                                  requiredFields: Array[String])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -167,7 +163,7 @@ class HtmlPartitionReaderFactory(hadoopConf: Map[String, String],
     new PartitionReader[InternalRow] {
       private lazy val rows: Iterator[InternalRow] = {
         val fsPath = new Path(p.path)
-        val fs = FileSystem.get(fsPath.toUri, HtmlTableSource.toConf(hadoopConf))
+        val fs = FileSystem.get(fsPath.toUri, hadoopConf.value.value)
         val in = fs.open(fsPath)
         val html =
           try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")

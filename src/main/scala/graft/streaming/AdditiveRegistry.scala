@@ -45,13 +45,13 @@ object AdditiveRegistry {
   private def baseId(upTo: Long): Long = -(upTo + 2)
 
   /** The absorbed horizon encoded by the newest base partition, or
-    * -1 when no compaction has run. 1-value driver read — registry
-    * maintenance metadata, bounded by contract. */
-  private def horizon(all: DataFrame): Long = {
-    val h = all.agg(max(when(col("batch_id") <= -2L, -col("batch_id") - 2L)))
-      .head().get(0)
-    if (h == null) -1L else h.asInstanceOf[Long]
-  }
+    * -1 when no compaction has run: read from the `batch_id=`
+    * directories of the committed data files `all` lists, so it costs
+    * no job and describes exactly the snapshot `all` reads. */
+  private def horizon(all: DataFrame): Long =
+    all.inputFiles.iterator.map(f => new org.apache.hadoop.fs.Path(f).getParent.getName)
+      .collect { case n if n.startsWith("batch_id=") => n.stripPrefix("batch_id=").toLong }
+      .filter(_ <= -2L).map(b => -b - 2L).maxOption.getOrElse(-1L)
 
   /** Every stored cell: `like`'s columns plus the batch_id partition,
     * through the shared committed-state read (empty, typed, before the
@@ -145,9 +145,10 @@ object AdditiveRegistry {
     * batch_id <= upToBatchId into ONE new base — the q123
     * maintenance shape applied to the registry, bounding partition
     * count. Absorbed partitions are then deleted as garbage;
-    * correctness never depends on the deletion (see the object doc). */
+    * correctness never depends on the deletion (see the object doc).
+    * `like` declares the cells' schema, as for `fold`. */
   def compact(spark: SparkSession, path: String, keys: Seq[String],
-              valueCol: String, upToBatchId: Long): Unit = {
+              valueCol: String, like: DataFrame, upToBatchId: Long): Unit = {
     // MAINTENANCE MUTEX (the GenIndex/EmbedDedup round-9 discipline
     // extended to the additive family): concurrent compacts are the
     // one writer pair the horizon algebra cannot absorb — two
@@ -162,10 +163,7 @@ object AdditiveRegistry {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.operators.RegistryIO.withMaintenanceLock(lockFs,
       path + "_maint_lock", s"AdditiveRegistry($path).compact") {
-    // compaction folds committed cells only: a never-committed
-    // registry has no cell schema to fold and fails here, loudly
-    val all = spark.read.parquet(path)
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    val all = readAll(spark, path, like)
     val h = horizon(all)
     require(upToBatchId > h,
       s"AdditiveRegistry.compact: upToBatchId=$upToBatchId must exceed " +

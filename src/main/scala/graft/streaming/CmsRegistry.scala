@@ -65,9 +65,12 @@ object CmsRegistry {
     * q161's merge_law_ok). Empty (typed) before the first committed
     * batch — the shared committed-state read. */
   def sketch(spark: SparkSession, path: String): DataFrame =
-    AdditiveRegistry.fold(spark, path, Keys, "cell",
-      spark.range(0).select(col("id").cast("int").as("i"),
-        col("id").as("bucket"), col("id").as("cell")))
+    AdditiveRegistry.fold(spark, path, Keys, "cell", cells(spark))
+
+  /** The cells' schema, as an empty frame. */
+  private def cells(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").cast("int").as("i"),
+      col("id").as("bucket"), col("id").as("cell"))
 
   /** The verified fold: checks the caller's (d, w) against the
     * registry's pinned identity before folding, so a probe written
@@ -80,7 +83,7 @@ object CmsRegistry {
   /** Compact batches <= upToBatchId into one base partition
     * (AdditiveRegistry.compact with the CMS cell keys). */
   def compact(spark: SparkSession, path: String, upToBatchId: Long): Unit =
-    AdditiveRegistry.compact(spark, path, Keys, "cell", upToBatchId)
+    AdditiveRegistry.compact(spark, path, Keys, "cell", cells(spark), upToBatchId)
 
   /** Point estimates for probe terms against a folded sketch:
     * min over hash rows of the probed cell; a never-touched cell is

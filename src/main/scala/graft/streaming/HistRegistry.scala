@@ -73,15 +73,18 @@ object HistRegistry {
     * `bucket * BucketMicro` boundary it reports. */
   def histogram(spark: SparkSession, path: String): DataFrame = {
     pin(spark, path)
-    AdditiveRegistry.fold(spark, path, Seq("bucket"), "n",
-      spark.range(0).select(col("id").as("bucket"), col("id").as("n")))
+    AdditiveRegistry.fold(spark, path, Seq("bucket"), "n", cells(spark))
   }
+
+  /** The buckets' schema, as an empty frame. */
+  private def cells(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").as("bucket"), col("id").as("n"))
 
   /** Compact batches <= upToBatchId into one base partition
     * (geometry-verified like the fold). */
   def compact(spark: SparkSession, path: String, upToBatchId: Long): Unit = {
     pin(spark, path)
-    AdditiveRegistry.compact(spark, path, Seq("bucket"), "n", upToBatchId)
+    AdditiveRegistry.compact(spark, path, Seq("bucket"), "n", cells(spark), upToBatchId)
   }
 
   /** Quantile estimates off a folded histogram: for each percentile,

@@ -90,5 +90,6 @@ object PackRegistry {
   def compact(spark: SparkSession, registryPath: String,
               upToBatchId: Long): Unit =
     AdditiveRegistry.compact(spark, registryPath, Keys, "n_assigned",
-      upToBatchId)
+      spark.range(0).select(lit("").as("lang"), col("id").as("fclass"),
+        col("id").as("n_assigned")), upToBatchId)
 }

@@ -44,12 +44,11 @@ class CommittedReadSpec extends SparkSpec {
       Seq("id", "cluster"), () => Seq((1L, 1L)).toDF("id", "cluster"),
       dropped = "cluster"),
     // an AdditiveRegistry user; its fold reads the compaction horizon
-    // with one aggregate (a shuffle stage and a result stage), the
-    // two jobs it submits
+    // from the listed batch_id= directories, with no job
     Site("CmsRegistry", p => graft.streaming.CmsRegistry.sketch(spark, p),
       Seq("i", "bucket", "cell"),
       () => Seq((0, 1L, 2L, 0L)).toDF("i", "bucket", "cell", "batch_id"),
-      dropped = "cell", partitionBy = Seq("batch_id"), readJobs = 2)
+      dropped = "cell", partitionBy = Seq("batch_id"))
   )
 
   private def fresh(): String =

@@ -114,4 +114,49 @@ class EngineSpec extends SparkSpec {
     // the star reaches the DELIVERED message channel, not just the column
     assert(sink2.sent.nonEmpty && sink2.sent.forall(_.startsWith("*NFL ")))
   }
+
+  test("a same-shape run builds no template; a new input shape builds one") {
+    def once(bks: Seq[String], odds: org.apache.spark.sql.DataFrame) =
+      Engine.run(odds, bks, "Bet365", teams, None, Map.empty, newLog(),
+        new CollectingAlertSink, None, maxAlertsPerTeamDay = 2, now = t0).delivered
+    assert(once(bookies, raw) == 2)
+    val built = Engine.templateBuilds
+    assert(once(bookies, raw) == 2 && Engine.templateBuilds == built)
+    // an extra bookie column is a new shape: new templates, same alerts
+    val wide = raw.withColumn("FanDuel", lit("-110"))
+    assert(once(bookies :+ "FanDuel", wide) == 2 && Engine.templateBuilds == built + 1)
+    assert(once(bookies :+ "FanDuel", wide) == 2 && Engine.templateBuilds == built + 1)
+  }
+
+  test("now is one instant per run: mirror stamp, alert ts and log stamp agree") {
+    // evaluating the clock on the driver submits no job
+    assert(org.apache.spark.JobsSubmitted.during(spark.sparkContext) {
+      org.apache.spark.sql.graft.Rebind.literal(spark, current_timestamp())
+    } == 0)
+    val mirror = new CollectingMirror
+    val log = newLog()
+    val r = Engine.run(raw, bookies, "Bet365", teams, None, Map.empty,
+      log, new CollectingAlertSink, Some(mirror), now = current_timestamp())
+    assert(r.delivered == 2)
+    val stamps = log.read(spark).select(
+      date_format(col("sent_at"), "yyyy-MM-dd HH:mm"),
+      graft.functions.Timestamps.phoenixDisplay(col("sent_at")), col("updated_at"))
+      .as[(String, String, String)].collect().distinct
+    assert(stamps.length == 1 && stamps.head._2 == stamps.head._3, stamps.toSeq)
+    val (header, rows) = mirror.last.get
+    val at = header.indexOf("updated_at")
+    assert(rows.map(_(at)).distinct == Seq(stamps.head._1))
+  }
+
+  test("a slot left unbound fails at planning, naming itself") {
+    import org.apache.spark.sql.graft.Rebind
+    val slot = Rebind.slot(spark, "odds", raw.schema)
+    val e = intercept[Throwable](slot.filter(col("Team") === "Jets").collect())
+    assert(e.toString.contains("odds") || e.getCause.toString.contains("odds"), e)
+    // binding checks the schema, nullability included
+    val template = slot.select(col("Team"))
+    assert(Rebind.bind(template, Map("odds" -> raw)).as[String].collect().length == 5)
+    intercept[IllegalArgumentException](Rebind.bind(template, Map("odds" -> raw.drop("idx"))))
+    intercept[IllegalArgumentException](Rebind.bind(template, Map.empty))
+  }
 }

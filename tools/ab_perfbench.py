@@ -2,7 +2,7 @@
 """Paired A/B runs of the repo benchmark: a parent revision against the
 working tree.
 
-    python3 tools/ab_perfbench.py <parent-rev> <workload> <pairs> [--seed N] [--trace]
+    python3 tools/ab_perfbench.py <parent-rev> <workload> <pairs> [--seed N] [--trace] [--jfr]
 
 Run from the root of a checkout. The parent revision is exported with
 `git archive` into a temporary directory; each pair then runs
@@ -24,6 +24,15 @@ pair's seed), and its per-layer metrics print side by side, with the
 notes' quality figures and each plain cycle's job count from the span
 file, so a claim shows which layer moved. Metrics both sides report
 as 0 (layers the workload does not run) are left out.
+
+With --jfr, one profiled run per side follows (the first pair's seed):
+the JVM records with Flight Recorder through JAVA_TOOL_OPTIONS (deep
+stacks, so Catalyst frames are not cut off), and the driver thread's
+execution samples print side by side, split by query phase: analysis,
+optimizer, planning, AQE, other. A sample's phase is the first phase
+marker met walking its stack from the innermost frame (so the optimizer
+and planner runs that AQE starts count as optimizer and planning). The
+count of processes the JVM forked prints too.
 """
 import argparse
 import json
@@ -35,11 +44,11 @@ import sys
 import tempfile
 
 
-def run_once(checkout, workload, seed, seconds, trace=False):
+def run_once(checkout, workload, seed, seconds, trace=False, env=None):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds),
            "--trace", "1" if trace else "0"]
-    r = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    r = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, env=env)
     lines = [ln for ln in r.stdout.splitlines() if ln.strip()]
     try:
         out = json.loads(lines[-1])
@@ -84,6 +93,81 @@ def traced_comparison(sides, workload, seed, seconds, layer_names):
         print(f"  plain-cycle jobs, {side}: {plain_cycle_jobs(sides[side], workload, seed)}")
 
 
+# (phase, frame markers); the first marker met from the innermost frame
+# names a sample's phase
+PHASES = [
+    ("analysis", ("QueryExecution.$anonfun$lazyAnalyzed", "QueryExecution.assertAnalyzed",
+                  "org.apache.spark.sql.catalyst.analysis.")),
+    ("optimizer", ("QueryExecution.$anonfun$lazyOptimizedPlan",
+                   "org.apache.spark.sql.catalyst.optimizer.")),
+    ("planning", ("QueryExecution.$anonfun$lazySparkPlan",
+                  "QueryExecution.$anonfun$lazyExecutedPlan",
+                  "org.apache.spark.sql.catalyst.planning.QueryPlanner")),
+    ("AQE", ("org.apache.spark.sql.execution.adaptive.",)),
+]
+DRIVER_THREAD = "main"
+
+
+def phase_of(frames):
+    for frame in frames:
+        for phase, markers in PHASES:
+            if any(m in frame for m in markers):
+                return phase
+    return "other"
+
+
+def jfr_profile(recording):
+    """(driver samples per phase, forked processes) of a recording."""
+    counts = {phase: 0 for phase, _ in PHASES}
+    counts["other"] = 0
+    p = subprocess.Popen(["jfr", "print", "--events", "jdk.ExecutionSample",
+                          "--stack-depth", "1024", recording],
+                         stdout=subprocess.PIPE, text=True)
+    thread, frames, in_stack = None, [], False
+    for line in p.stdout:
+        t = line.strip()
+        if t.startswith("sampledThread = "):
+            thread = t.split('"')[1]
+        elif t == "stackTrace = [":
+            in_stack, frames = True, []
+        elif in_stack and t == "]":
+            in_stack = False
+            if thread == DRIVER_THREAD:
+                counts[phase_of(frames)] += 1
+        elif in_stack:
+            frames.append(t)
+    p.wait()
+    forks = subprocess.run(["jfr", "print", "--events", "jdk.ProcessStart", recording],
+                           capture_output=True, text=True).stdout.count("jdk.ProcessStart {")
+    return counts, forks
+
+
+def profiled_comparison(sides, workload, seed, seconds):
+    tmp = tempfile.mkdtemp(prefix="ab-jfr-")
+    try:
+        out = {}
+        for side in ("parent", "change"):
+            rec = os.path.join(tmp, f"{side}.jfr")
+            env = dict(os.environ)
+            env["JAVA_TOOL_OPTIONS"] = (
+                f"-XX:StartFlightRecording=settings=profile,dumponexit=true,filename={rec} "
+                f"-XX:FlightRecorderOptions=stackdepth=1024,repository={tmp}")
+            r = run_once(sides[side], workload, seed, seconds, env=env)
+            out[side] = (r.get("correct"),) + jfr_profile(rec)
+        print(f"\nprofiled run, seed {seed}: correct parent={out['parent'][0]} "
+              f"change={out['change'][0]}")
+        print(f"  {'driver samples':28s} {'parent':>16s} {'change':>16s}")
+        totals = {side: max(sum(out[side][1].values()), 1) for side in out}
+        for phase in [p for p, _ in PHASES] + ["other"]:
+            print(f"  {phase:28s} " + " ".join(
+                f"{out[s][1][phase]:7d} ({100 * out[s][1][phase] / totals[s]:4.1f}%)"
+                for s in ("parent", "change")))
+        print(f"  {'forked processes':28s} " + " ".join(
+            f"{out[s][2]:16d}" for s in ("parent", "change")))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
@@ -99,6 +183,8 @@ def main():
     p.add_argument("--seed", type=int, default=1)
     p.add_argument("--trace", action="store_true",
                    help="after the pairs, one traced run per side, per-layer metrics side by side")
+    p.add_argument("--jfr", action="store_true",
+                   help="after the pairs, one profiled run per side, driver samples per query phase")
     a = p.parse_args()
 
     root = os.getcwd()
@@ -149,6 +235,8 @@ def main():
         if a.trace:
             traced_comparison(sides, a.workload, a.seed, seconds,
                               [m["name"] for m in bench["per_layer"]])
+        if a.jfr:
+            profiled_comparison(sides, a.workload, a.seed, seconds)
         return 0
     finally:
         shutil.rmtree(parent, ignore_errors=True)
