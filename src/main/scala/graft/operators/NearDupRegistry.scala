@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Text
 
 /** CONTINUOUS-ingest NEAR-dup gate: a parquet-backed MinHash
   * signature registry persisted across runs — DedupRegistry's loop
@@ -59,34 +60,24 @@ class NearDupRegistry(path: String, numPerm: Int, bands: Int,
     * SAME-SHAPE but INCOMPATIBLE signatures: probing one with the
     * other silently under-counts agreement and forgets dup history.
     * The mode is pinned on first use and a mismatched open fails
-    * loudly (the EmbedDedupRegistry centroid-fingerprint rule). A
-    * registry with committed signatures but NO sidecar predates the
-    * mode knob and is minhash by definition. */
+    * loudly (the EmbedDedupRegistry centroid-fingerprint rule).
+    * "minhash" pins as Text.MinhashFamily, so a registry of the
+    * retired correlated family — a sidecar of "minhash", or committed
+    * signatures with no sidecar (older still) — is refused too. */
   private val modePath = path + "_sig_mode"
+  private val pinnedMode = if (sigMode == "minhash") Text.MinhashFamily else sigMode
   private var modeChecked = false
   private def ensureMode(spark: SparkSession): Unit = if (!modeChecked) {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val mp = new org.apache.hadoop.fs.Path(modePath)
-    val fs = mp.getFileSystem(conf)
-    val stored: Option[String] =
-      if (fs.exists(mp)) {
-        val in = fs.open(mp)
-        Some(try new String(in.readAllBytes(), "UTF-8").trim finally in.close())
-      } else if (RegistryIO.committedDataExists(spark, path)) Some("minhash")
-      else None
-    stored match {
-      case Some(m) =>
-        require(m == sigMode,
-          s"NearDupRegistry at $path was built with sigMode=$m; opening it " +
-            s"with sigMode=$sigMode would silently miss near-dups — use the " +
-            "original mode, or start a new registry path")
-      case None =>
-        // pin the mode BEFORE any signature lands: a crash after this
-        // write but before the first append leaves a sidecar with no
-        // data — harmless (the next run re-asserts the same mode).
-        // Atomic via the RegistryIO.SwapStore seam.
-        RegistryIO.atomicWriteLines(fs, modePath, Seq(sigMode))
-    }
+    val stored = RegistryIO.pinnedScheme(spark, path, modePath, pinnedMode,
+      legacy = Text.RetiredMinhashFamily)
+    require(stored != Text.RetiredMinhashFamily,
+      s"NearDupRegistry at $path holds signatures of the retired MinHash " +
+        s"family (sigMode=$stored, correlated permutations); they do not " +
+        "agree with today's signatures — rebuild the registry at a new path")
+    require(stored == pinnedMode,
+      s"NearDupRegistry at $path was built with sigMode=$stored; opening it " +
+        s"with sigMode=$sigMode would silently miss near-dups — use the " +
+        "original mode, or start a new registry path")
     modeChecked = true
   }
 

@@ -338,6 +338,23 @@ object RegistryIO {
                        lines: Seq[String]): Unit =
     swapStore.swap(fs, path, lines)
 
+  /** The signature scheme a registry's state at `dataPath` was written
+    * under, from its one-line `sidecar`. Committed state with no
+    * sidecar predates the pin and reads as `legacy`. A registry with
+    * no committed state and no sidecar pins `scheme` now, BEFORE any
+    * signature lands (a crash after the pin leaves a sidecar with no
+    * data, which the next run re-asserts), and gets `scheme` back.
+    * The caller refuses any answer other than its own scheme. */
+  def pinnedScheme(spark: SparkSession, dataPath: String, sidecar: String,
+                   scheme: String, legacy: String): String = {
+    val fs = new org.apache.hadoop.fs.Path(sidecar)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readLines(fs, sidecar).flatMap(_.headOption).getOrElse {
+      if (committedDataExists(spark, dataPath)) legacy
+      else { atomicWriteLines(fs, sidecar, Seq(scheme)); scheme }
+    }
+  }
+
   /** Overwrite a small line-file (lifecycle manifests). Creates the
     * parent directory when absent — writing a manifest into a
     * retired-but-never-created staging dir is what lets a straddling

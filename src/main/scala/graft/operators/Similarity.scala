@@ -481,15 +481,17 @@ object Similarity {
     transform(vec, x =>
       greatest(lit(-127), least(lit(127), round(x.cast("double") * 127))).cast("int"))
 
-  /** Integer dot product over quantized vectors (exact, order-free).
-    * Runs through the codegen'd FloatDotProduct: int8 values and
-    * their products (|p| <= 16129) are exact as float, and the double
-    * accumulation is exact far beyond any real dim — so the result
-    * IS the integer dot, at codegen speed instead of the interpreted
-    * per-element lambda chain (this is the O(|Q|*|C|) hot path). */
-  def dotQ8(a: Column, b: Column): Column =
-    dot(transform(a, x => x.cast("float")),
-      transform(b, x => x.cast("float"))).cast("long")
+  /** Integer dot product over two quantize8 (array<int>) vectors:
+    * exact and order-free. This is the per-candidate-pair kernel of
+    * every int8 probe (O(|Q|*|C|)), so it is ONE codegen'd
+    * LongDotProduct loop reading the ints directly — no per-element
+    * lambda. A null array, a null element or a length mismatch
+    * yields null. */
+  def dotQ8(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graft.{GraftBridge, LongDotProduct}
+    GraftBridge.column(LongDotProduct(
+      GraftBridge.expression(a), GraftBridge.expression(b)))
+  }
 
   /** Top-k by quantized dot product — the memory-bound scale path:
     * rank on the int score with an id tie-break. */

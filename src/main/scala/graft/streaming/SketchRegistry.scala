@@ -41,10 +41,22 @@ object SketchRegistry {
 
   /** foreachBatch body: fold the batch's per-source signatures into
     * the parquet registry by elementwise min. A source seen for the
-    * first time inserts its batch signature as-is. */
+    * first time inserts its batch signature as-is. The MinHash family
+    * is pinned in a `<path>_sig_mode` sidecar, as NearDupRegistry
+    * pins its mode. */
   def mergeIntoRegistry(path: String, sourceCol: String, textCol: String,
                         n: Int, numPerm: Int)
                        (batch: DataFrame, batchId: Long): Unit = {
+    // Guard: state written under the retired MinHash family (no
+    // sidecar, or a sidecar naming it) must be rejected, not merged —
+    // the elementwise min of two families' signatures estimates
+    // nothing, and nothing in the data tells them apart.
+    val family = RegistryIO.pinnedScheme(batch.sparkSession, path,
+      path + "_sig_mode", Text.MinhashFamily, legacy = Text.RetiredMinhashFamily)
+    require(family == Text.MinhashFamily,
+      s"SketchRegistry at $path holds signatures of MinHash family " +
+        s"'$family', not '${Text.MinhashFamily}'; merging would mix " +
+        "permutation families — rebuild the registry at a new path")
     val sigs = batchSignatures(batch, sourceCol, textCol, n, numPerm)
     // Guard: a registry written with a DIFFERENT numPerm must be
     // rejected, not silently merged — zip_with pads the shorter array

@@ -48,6 +48,30 @@ class EmbedDedupRegistrySpec extends SparkSpec {
     assert(reg.read(spark).count() == 3)
   }
 
+  test("the probe join's condition is the compiled int8 dot: LongDotProduct, no higher-order function") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.graft.{FloatDotProduct, LongDotProduct}
+    val dir = Files.createTempDirectory("graft_ereg_").toString + "/reg"
+    val reg = new EmbedDedupRegistry(dir, epsPermille = 980)
+    reg.dedupAppend(Seq((1L, Array(1.0f, 0.0f, 0.0f, 0.0f)))
+      .toDF("vec_id", "embedding"), cents, "vec_id", "embedding")
+    val plans = org.apache.spark.PlansExecuted.during(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]) {
+      reg.dedupAppend(Seq((2L, Array(0.999f, 0.01f, 0.0f, 0.0f)))
+        .toDF("vec_id", "embedding"), cents, "vec_id", "embedding")
+    }
+    // every join whose condition scores pairs (winners x registry on
+    // cell, filtered on qdot) — per candidate pair, so no lambda there
+    val conditions = plans.flatMap(_.collect { case j: Join => j.condition }.flatten)
+      .filter(_.exists(e => e.isInstanceOf[LongDotProduct] || e.isInstanceOf[FloatDotProduct]))
+    assert(conditions.nonEmpty, s"no pair-scoring join among ${plans.size} plans")
+    conditions.foreach { c =>
+      assert(c.exists(_.isInstanceOf[LongDotProduct]), s"not the int8 kernel: $c")
+      assert(!c.exists(_.isInstanceOf[HigherOrderFunction]), s"interpreted lambda: $c")
+    }
+  }
+
   test("in-batch dups resolve first: one signature per dup group") {
     val dir = Files.createTempDirectory("graft_ereg_").toString + "/reg"
     val reg = new EmbedDedupRegistry(dir, epsPermille = 980)

@@ -11,7 +11,16 @@ import org.apache.spark.sql.functions._
 class NearDupRegistrySpec extends SparkSpec {
   import spark.implicits._
 
-  private val a = "spark query engine scans parquet files with vectorized readers and pushes filters down"
+  // One-word edits of a 69-token text: 3-gram Jaccard 0.91, well inside
+  // what an 8x4 banding at threshold 0.5 catches (a 13-token text with
+  // one word changed is Jaccard 0.57, which that banding misses ~41%
+  // of the time under independent permutations)
+  private val a = "spark query engine scans parquet files with vectorized readers " +
+    "and pushes filters down into the scan so that only the row groups whose " +
+    "statistics can match the predicate are read from disk while the optimizer " +
+    "rewrites joins into broadcast hash joins when one side is small enough to " +
+    "ship to every executor and the planner fuses operators into whole stage " +
+    "generated code that runs tight loops over columnar batches"
   private val aNear = a.replace("vectorized", "columnar")
   private val aNear2 = a.replace("parquet", "orc")
   private val b = "completely different text about cooking pasta with garlic butter and fresh basil leaves"
@@ -111,6 +120,27 @@ class NearDupRegistrySpec extends SparkSpec {
     assert(e2.getMessage.contains("minhash"))
   }
 
+  test("a registry of the retired MinHash family is refused, pinned or unpinned") {
+    val dir = java.nio.file.Files.createTempDirectory("neardup_retired").toString + "/reg"
+    reg(dir).dedupAppend(Seq((1L, a)).toDF("doc_id", "text"), "doc_id", "text")
+    val sidecar = dir + "_sig_mode"
+    val fs = new org.apache.hadoop.fs.Path(sidecar)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(RegistryIO.readLines(fs, sidecar).contains(Seq(graft.functions.Text.MinhashFamily)))
+    def refused(): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        reg(dir).probe(Seq((9L, a)).toDF("doc_id", "text"), "doc_id", "text").count()
+      }
+      assert(e.getMessage.contains("retired MinHash family"), e.getMessage)
+    }
+    // the sidecar value the correlated family pinned...
+    RegistryIO.atomicWriteLines(fs, sidecar, Seq("minhash"))
+    refused()
+    // ...and committed signatures older than any sidecar
+    fs.delete(new org.apache.hadoop.fs.Path(sidecar), false)
+    refused()
+  }
+
   test("in-batch near-dup CHAIN keeps one representative (components, not greedy)") {
     val dir = java.nio.file.Files.createTempDirectory("neardup_reg2").toString + "/reg"
     // a ~ aNear and a ~ aNear2: a chain that a pairwise greedy drop
@@ -170,8 +200,10 @@ class NearDupRegistrySpec extends SparkSpec {
     val r1 = reg(base1 + "/reg")
     r1.dedupAppend(Seq((1L, a), (2L, b)).toDF("doc_id", "text"), "doc_id", "text")
     // simulate a registry written before the band index existed: copy
-    // ONLY the signature parquet to a fresh path (no index files, no
-    // catalog entry for the new path's table)
+    // ONLY the signature parquet and its signature-mode sidecar to a
+    // fresh path (no index files, no catalog entry for the new path's
+    // table; signatures with no sidecar at all are the retired MinHash
+    // family and refused — see below)
     val base2 = java.nio.file.Files.createTempDirectory("neardup_reg9").toString
     val src = java.nio.file.Paths.get(base1, "reg")
     val dst = java.nio.file.Paths.get(base2, "reg")
@@ -180,6 +212,8 @@ class NearDupRegistrySpec extends SparkSpec {
       if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
       else java.nio.file.Files.copy(p, t)
     }
+    java.nio.file.Files.copy(java.nio.file.Paths.get(base1, "reg_sig_mode"),
+      java.nio.file.Paths.get(base2, "reg_sig_mode"))
     val r2 = reg(base2 + "/reg")
     // the healed index must gate a near-dup of the legacy content
     val out = r2.dedupAppend(

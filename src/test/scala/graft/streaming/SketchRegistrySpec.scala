@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.operators.RegistryIO
 import java.nio.file.Files
 
 /** The streaming sketch registry must converge to exactly the
@@ -55,5 +56,26 @@ class SketchRegistrySpec extends SparkSpec {
         .as[(String, Seq[Long])].collect().toMap
       assert(replayed == streamed, "replaying a batch must be a fixpoint")
     } finally q.stop()
+  }
+
+  test("state of the retired MinHash family is refused, never merged") {
+    val reg = Files.createTempDirectory("graft_sketch_").toString + "/registry"
+    def merge(): Unit = SketchRegistry.mergeIntoRegistry(reg, "source", "text", 3, NumPerm)(
+      b1.toDF("source", "text"), 0L)
+    merge()
+    val sidecar = reg + "_sig_mode"
+    val fs = new org.apache.hadoop.fs.Path(sidecar)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(RegistryIO.readLines(fs, sidecar).contains(Seq(graft.functions.Text.MinhashFamily)))
+    merge() // the pinned family merges on
+    def refused(): Unit = {
+      val e = intercept[IllegalArgumentException](merge())
+      assert(e.getMessage.contains("MinHash family"), e.getMessage)
+    }
+    // committed state with no sidecar predates the pin: retired family
+    fs.delete(new org.apache.hadoop.fs.Path(sidecar), false)
+    refused()
+    RegistryIO.atomicWriteLines(fs, sidecar, Seq("minhash"))
+    refused()
   }
 }

@@ -17,7 +17,8 @@ quartiles, the change's win count (ties count for neither side), and
 whether a gain could be claimed on it: the change wins at least 9/10 of
 the pairs and the medians differ by more than the parent's
 interquartile distance. Every run must report `correct`; a pair with a
-run that does not is listed and counts as a loss.
+run that does not is listed and counts as a loss, and that run's line
+shows its notes' `dup_recall`, `unique_kept_frac` and `failed_frac`.
 
 With --trace, one traced run per side follows the pairs (the first
 pair's seed), and its per-layer metrics print side by side, with the
@@ -54,10 +55,21 @@ def run_once(checkout, workload, seed, seconds, trace=False, env=None):
         out = json.loads(lines[-1])
     except (IndexError, ValueError):
         sys.stderr.write(r.stderr[-2000:])
-        return {"correct": False, "metrics": {}}
+        return {"correct": False, "metrics": {}, "notes": {}}
     notes = [ln[len("notes "):] for ln in lines if ln.startswith("notes ")]
     out["notes"] = json.loads(notes[-1]) if notes else {}
     return out
+
+
+def why_not_correct(out):
+    """The notes' quality figures of a run that is not `correct`, so a
+    miss (a dropped dup, a lost unique, a failed cycle) shows which."""
+    if out.get("correct"):
+        return ""
+    notes = out["notes"]
+    figures = {k: notes[k] for k in ("dup_recall", "unique_kept_frac", "failed_frac")
+               if k in notes}
+    return f" notes={json.dumps(figures)}"
 
 
 def plain_cycle_jobs(checkout, workload, seed):
@@ -209,7 +221,7 @@ def main():
                 vals = {k: round(v["value"], 4) for k, v in out["metrics"].items()
                         if k in better}
                 print(f"pair {i} seed {seed} {side:6s} correct={out.get('correct')} "
-                      f"{json.dumps(vals)}", flush=True)
+                      f"{json.dumps(vals)}{why_not_correct(out)}", flush=True)
 
         bad = [(s, i) for s in runs for i, o in enumerate(runs[s])
                if not o.get("correct")]
