@@ -66,14 +66,7 @@ object GraftSession {
   )
 
   def build(cpus: String): SparkSession = {
-    // Experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" lets bench
-    // A/B runs try conf variants without a recompile. Applied LAST,
-    // so it can override any default below.
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(';').filter(_.contains('=')).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
-      }
-    val spark = extra.foldLeft(SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions",
         scala.util.Try((cpus.toInt / 2).max(1).toString).getOrElse(cpus))
@@ -91,7 +84,6 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // no chmod process per written file (see NioLocalFileSystem)
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
-    )((b, kv) => b.config(kv._1, kv._2))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -41,9 +41,8 @@ object Text {
   def md5Long(c: Column, k: Int): Column = md5LongAt(c, 1, k)
 
   /** Count-min-sketch bucket of `term` under hash row `i`: md5 of
-    * "i|term" mod w — one digest per (i, term). Shared by the q161
-    * batch sketch and the streaming CmsRegistry so their cells are
-    * interchangeable (DuckDB mirror:
+    * "i|term" mod w — one digest per (i, term). Used by the q161
+    * batch sketch (DuckDB mirror:
     * ('0x'||substr(md5(i::VARCHAR||'|'||term),1,12))::BIGINT % w). */
   def cmsBucket(i: Column, term: Column, w: Int): Column =
     pmod(md5Long(concat_ws("|", i.cast("string"), term), 12), lit(w.toLong))

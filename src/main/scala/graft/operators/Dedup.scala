@@ -685,9 +685,8 @@ object Dedup {
 
   /** Alternating large-star/small-star connected components — the
     * O(log n)-round variant (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14) that survives ADVERSARIAL
-    * component diameters at 100 TB, where plain min-label propagation
-    * (connectedComponents above) needs O(diameter) rounds.
+    * MapReduce and Beyond", SoCC'14). connectedComponents' distributed
+    * loop above jumps pointers and needs O(log diameter) rounds.
     *
     *  - large-star: per node u, hang every LARGER neighbor off
     *    m = min(N(u) ∪ {u});

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * LIFECYCLE (VERDICT r6 #6 — one compaction + crash-window policy
   * across the registry family): appends, compaction, and forget run
   * through the same GenIndex generation machinery as NearDupRegistry
-  * and WinnowRegistry — per-batch appends fragment one file group per
+  * — per-batch appends fragment one file group per
   * batch, `compactIndex` rewrites the active generation into
   * ~nBuckets files behind an atomic sidecar swap (a crash leaves the
   * old generation fully active), and `forget` removes fingerprints by
@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * be READ, and a bucketed table scan would reject foreign file
   * names — the probe's anti-join ships only the one fp column, so
   * the bucket-locality a table scan would buy is the smallest win in
-  * the family (the structural indexes that probe by key every batch,
-  * NearDup bands and Winnow fingerprints, do use it). Compaction
+  * the family (the structural index that probes by key every batch,
+  * NearDup's bands, does use it). Compaction
   * itself reads plain files too (the GenIndex contract), so a
   * foreign-compacted generation migrates INTO the bucketed layout on
   * its next rewrite instead of being rejected.

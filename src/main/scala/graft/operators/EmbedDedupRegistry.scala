@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** CROSS-RUN SEMANTIC near-dup registry — the embedding analogue of
   * NearDupRegistry, completing the registry family (exact content:
-  * DedupRegistry; lexical near-dup: NearDupRegistry; passage
-  * overlap: WinnowRegistry; semantic: this). A parquet store of
+  * DedupRegistry; lexical near-dup: NearDupRegistry; semantic:
+  * this). A parquet store of
   * every accepted vector's signature — (id, vq int8 vector, nq its
   * squared norm) partitioned by a BOUNDED bucket of its IVF cell
   * (see DirBuckets) — so a new batch dedups against everything ever
@@ -673,21 +673,10 @@ class EmbedDedupRegistry(path: String, epsPermille: Int) {
     * pass when this runs inside the streaming curation loop. */
   def dedupAppendBatch(batch: DataFrame, centroids: DataFrame,
                        idCol: String, vecCol: String,
-                       sinkPath: String, batchId: Long): DataFrame = {
-    // batch_id is reserved HERE (not in dedupAppend, whose sinks are
-    // caller-defined): IdempotentSink keys the sink on a batch_id
-    // column it adds, so a data column of that name would be silently
-    // overwritten in the sink while the returned rows keep the
-    // original values — corruption the caller cannot see
-    // case-insensitive like the vq/nq/cell guard: withColumn resolves
-    // case-insensitively, so "Batch_ID" would be clobbered just the same
-    require(!batch.columns.exists(_.equalsIgnoreCase("batch_id")),
-      "EmbedDedupRegistry.dedupAppendBatch: batch must not contain a " +
-        "batch_id column (the idempotent sink keys its partitions on it)")
+                       sinkPath: String, batchId: Long): DataFrame =
     dedupAppend(batch, centroids, idCol, vecCol,
       persist = out =>
         graft.streaming.IdempotentSink.parquetByBatch(sinkPath)(out, batchId))
-  }
 
   /** Migrate the registry to a NEW centroid set (see class doc):
     * re-assign every stored signature to its nearest new centroid,

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** A persisted BUCKETED index table with a GENERATION lifecycle —
-  * the shared machinery behind NearDupRegistry's band index and
-  * WinnowRegistry's fingerprint index (VERDICT r5 #8: registry
-  * compaction parity with CmsRegistry).
+  * the shared machinery behind DedupRegistry's fingerprint index,
+  * NearDupRegistry's band index, and the token, edge, code and
+  * tombstone tables of LateInteractionRegistry, KnnGraphRegistry and
+  * PQRegistry.
   *
   * Why generations: the index is append-per-batch, so a long-lived
   * registry accretes one small file group per `dedupAppend` — at
@@ -61,11 +62,6 @@ import org.apache.spark.sql.functions.col
   * they arrived before the snapshot. Crash-safety (the generation
   * contract) and replay-safety (each registry's idempotent-append
   * algebra) are separate properties and hold without coordination.
-  * The one family member that supports concurrent appends WITHOUT
-  * any detection is AdditiveRegistry — by construction: its
-  * horizon-encoded base only ever absorbs batches BELOW an explicit
-  * id, so concurrent appends land above the horizon and survive
-  * (see its object doc).
   *
   * READER-vs-GC (VERDICT r7 #4): a rewrite RETAINS the outgoing
   * generation's directory (and catalog entry) instead of deleting it
@@ -107,8 +103,8 @@ import org.apache.spark.sql.functions.col
   * SET-semantics on whole rows — sound for every GenIndex member
   * because their rows are idempotent facts (probes decide by
   * distinct-id membership / agreement >= threshold; a registry whose
-  * row MULTIPLICITY carries meaning must not ride GenIndex —
-  * AdditiveRegistry documents exactly why it does not). The window
+  * row MULTIPLICITY carries meaning must not ride GenIndex, because
+  * a re-absorb would collapse its duplicate rows). The window
   * between the in-rewrite late-file absorb and its manifest update
   * is covered by the same mechanism one cycle later: the late files
   * re-surface as stragglers and anti-join away against the source
@@ -312,8 +308,8 @@ class GenIndex(tableBase: String, rootLocation: String,
     // one bucket and the writer splits nothing further.
     //
     // The source is read as PLAIN PARQUET FILES, not via the bucketed
-    // table (root cause of the WinnowRegistrySpec flake, VERDICT r6
-    // #3, reproduced deterministically): a bucketed-table scan
+    // table (root cause of a compaction flake, VERDICT r6 #3,
+    // reproduced deterministically): a bucketed-table scan
     // advertises HashPartitioning(bucketCols, nBuckets), which lets
     // EnsureRequirements elide the repartition exchange — and with no
     // exchange left downstream, the auto-bucketed-scan rule then
@@ -374,7 +370,7 @@ class GenIndex(tableBase: String, rootLocation: String,
     // old generation below would destroy the live index. A silent
     // stale read here is also the one way a caller could keep
     // operating on the pre-rewrite files believing it compacted
-    // (the WinnowRegistrySpec flake's suspected shape) — fail loudly
+    // (that flake's suspected shape) — fail loudly
     // with both numbers instead.
     val seen = currentGen(spark)
     require(seen == next,

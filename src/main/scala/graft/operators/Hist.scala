@@ -2,9 +2,8 @@ package graft.operators
 
 /** The shared micro-quantization and bucketing of the mergeable
   * histogram quantile sketch — ONE definition parsed by the q181
-  * batch query, its DuckDB oracle, and the streaming HistRegistry,
-  * so all three agree bitwise by construction (the bm25Score
-  * single-parse rule).
+  * batch query and its DuckDB oracle, so both agree bitwise by
+  * construction (the bm25Score single-parse rule).
   *
   * value -> micro: exact integer micro-units, floor(v * 1000);
   * micro -> bucket: 500-micro (0.5-unit) wide histogram cells. Both
@@ -15,7 +14,4 @@ package graft.operators
 object Hist {
   val MicroSql = "cast(floor(value * 1000.0) as bigint)"
   val BucketSql = "cast(floor(micro / 500.0) as bigint)"
-
-  /** Bucket width in micro units (kept beside the SQL it must match). */
-  val BucketMicro = 500L
 }

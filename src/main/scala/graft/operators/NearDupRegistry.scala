@@ -45,14 +45,8 @@ class NearDupRegistry(path: String, numPerm: Int, bands: Int,
     s"NearDupRegistry: bands($bands) * rowsPerBand($rowsPerBand) != numPerm($numPerm)")
   require(simThreshold > 0 && simThreshold <= 1,
     "NearDupRegistry: simThreshold must be in (0, 1]")
-  // "media:*" modes are constructed ONLY by MediaDupRegistry (same
-  // banded core, quantized-bucket signatures): the text entry points
-  // below refuse them, and the sidecar pin keeps a media registry and
-  // a text registry from ever being opened as each other
-  require(sigMode == "minhash" || sigMode == "oph" ||
-      sigMode.startsWith("media:"),
-    s"NearDupRegistry: sigMode must be 'minhash', 'oph', or 'media:*' " +
-      s"(MediaDupRegistry-constructed), got '$sigMode'")
+  require(sigMode == "minhash" || sigMode == "oph",
+    s"NearDupRegistry: sigMode must be 'minhash' or 'oph', got '$sigMode'")
 
   /** Signature scheme sidecar: "minhash" (k independent permutation
     * mins) and "oph" (one-permutation-hashing with rotation
@@ -90,9 +84,6 @@ class NearDupRegistry(path: String, numPerm: Int, bands: Int,
   private def signatures(sh: DataFrame): DataFrame = sigMode match {
     case "oph" => Dedup.ophSignaturesFromShingles(sh, numPerm)
       .select("id", "sig")
-    case m if m.startsWith("media:") => throw new IllegalArgumentException(
-      s"NearDupRegistry at $path is a media-fingerprint registry " +
-        "(use MediaDupRegistry's probe/dedupAppend, not the text entry points)")
     case _ => Dedup.minhashSignaturesFromShingles(sh, numPerm)
   }
 
@@ -161,8 +152,7 @@ class NearDupRegistry(path: String, numPerm: Int, bands: Int,
       .select(col("id"), guardedSig(col("sig")))
 
   /** A registry/index written with a different numPerm must fail
-    * loudly, not silently estimate with mixed permutations (the
-    * SketchRegistry merge-guard rule). */
+    * loudly, not silently estimate with mixed permutations. */
   private def guardedSig(sig: Column): Column =
     when(size(sig) === numPerm, sig)
       .otherwise(raise_error(concat(
@@ -210,19 +200,10 @@ class NearDupRegistry(path: String, numPerm: Int, bands: Int,
     * serving layer runs before deciding anything. */
   def probe(batch: DataFrame, idCol: String, textCol: String,
             n: Int = 3): DataFrame = {
-    ensureMode(batch.sparkSession)
-    val sigs = signatures(Dedup.shingleSets(batch, idCol, textCol, n))
-    probeFromSignatures(batch.sparkSession, sigs).select(col("id").as(idCol))
-  }
-
-  /** The probe over an already-built (id, sig) frame — the
-    * signature-agnostic core (MediaDupRegistry routes its quantized
-    * bucket fingerprints through here; the text probe above is the
-    * shingle-signature instantiation). */
-  private[operators] def probeFromSignatures(spark: SparkSession,
-                                             sigs: DataFrame): DataFrame = {
+    val spark = batch.sparkSession
     ensureMode(spark)
-    matchedIds(spark, sigs)
+    val sigs = signatures(Dedup.shingleSets(batch, idCol, textCol, n))
+    matchedIds(spark, sigs).select(col("id").as(idCol))
   }
 
   /** Near-dup-gate `batch` against the registry AND within itself,
@@ -231,50 +212,13 @@ class NearDupRegistry(path: String, numPerm: Int, bands: Int,
     * the survivors. */
   def dedupAppend(batch: DataFrame, idCol: String, textCol: String,
                   n: Int = 3,
-                  persist: DataFrame => Unit = _ => ()): DataFrame =
-    dedupAppendFromSignatures(batch, idCol,
-      signatures(Dedup.shingleSets(batch, idCol, textCol, n)), persist)
-
-  /** dedupAppend with the corpus sink made IDEMPOTENT PER BATCH — the
-    * EmbedDedupRegistry.dedupAppendBatch contract on the lexical
-    * member: survivors land at `sinkPath/batch_id=<batchId>/` by
-    * dynamic-partition overwrite, so an at-least-once replay of the
-    * SAME (batch, batchId) leaves exactly one copy of every surviving
-    * row whether the crash hit before or after the signature append.
-    * Replay before the append is deterministic (same registry state →
-    * same in-batch CC representatives → same survivor set → same
-    * partition, overwritten); replay after it self-matches COMPLETELY
-    * (a registered signature agrees with itself on every permutation,
-    * so agreement = numPerm >= minAgree with no zero-norm analogue),
-    * the survivor set is empty, and an empty dynamic overwrite
-    * touches no partitions — the first run's rows stand. `batchId` is
-    * the caller's ingest sequence number (foreachBatch's id). */
-  def dedupAppendBatch(batch: DataFrame, idCol: String, textCol: String,
-                       sinkPath: String, batchId: Long,
-                       n: Int = 3): DataFrame = {
-    // batch_id is reserved (the EmbedDedupRegistry rule, case-
-    // insensitive like Spark's resolution): the sink keys its
-    // partitions on a batch_id column it adds, so a data column of
-    // that name would be silently clobbered in the sink
-    require(!batch.columns.exists(_.equalsIgnoreCase("batch_id")),
-      "NearDupRegistry.dedupAppendBatch: batch must not contain a " +
-        "batch_id column (the idempotent sink keys its partitions on it)")
-    dedupAppend(batch, idCol, textCol, n,
-      persist = out =>
-        graft.streaming.IdempotentSink.parquetByBatch(sinkPath)(out, batchId))
-  }
-
-  /** dedupAppend over an already-built (id, sig) frame — the
-    * signature-agnostic core shared with MediaDupRegistry. `sigs0`
-    * must hold one length-numPerm signature per batch id. */
-  private[operators] def dedupAppendFromSignatures(
-      batch: DataFrame, idCol: String, sigs0: DataFrame,
-      persist: DataFrame => Unit): DataFrame = {
+                  persist: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
     ensureMode(spark)
     // one signature pass; it feeds in-batch pairs AND the registry
     // probe (multi-consumer rule)
-    val sigs = Dedup.DefaultMaterialize(sigs0)
+    val sigs = Dedup.DefaultMaterialize(
+      signatures(Dedup.shingleSets(batch, idCol, textCol, n)))
     val batchBands = Dedup.DefaultMaterialize(bandRows(sigs))
 
     // in-batch: LSH candidates -> agreement verify -> connected
@@ -307,4 +251,25 @@ class NearDupRegistry(path: String, numPerm: Int, bands: Int,
     appendToIndex(fresh)
     out
   }
+
+  /** dedupAppend with the corpus sink made IDEMPOTENT PER BATCH — the
+    * EmbedDedupRegistry.dedupAppendBatch contract on the lexical
+    * member: survivors land at `sinkPath/batch_id=<batchId>/` by
+    * dynamic-partition overwrite, so an at-least-once replay of the
+    * SAME (batch, batchId) leaves exactly one copy of every surviving
+    * row whether the crash hit before or after the signature append.
+    * Replay before the append is deterministic (same registry state →
+    * same in-batch CC representatives → same survivor set → same
+    * partition, overwritten); replay after it self-matches COMPLETELY
+    * (a registered signature agrees with itself on every permutation,
+    * so agreement = numPerm >= minAgree with no zero-norm analogue),
+    * the survivor set is empty, and an empty dynamic overwrite
+    * touches no partitions — the first run's rows stand. `batchId` is
+    * the caller's ingest sequence number (foreachBatch's id). */
+  def dedupAppendBatch(batch: DataFrame, idCol: String, textCol: String,
+                       sinkPath: String, batchId: Long,
+                       n: Int = 3): DataFrame =
+    dedupAppend(batch, idCol, textCol, n,
+      persist = out =>
+        graft.streaming.IdempotentSink.parquetByBatch(sinkPath)(out, batchId))
 }

@@ -55,8 +55,7 @@ object Scale extends QueryGroup {
       "1000000.0) as bigint)"
 
   /** q181's micro-unit quantization and bucketing — the shared
-    * operators.Hist definitions (also the streaming HistRegistry's
-    * cells), same single-parse rule as bm25Score. */
+    * operators.Hist definitions, same single-parse rule as bm25Score. */
   private val microExpr = graft.operators.Hist.MicroSql
   private val bucketExpr = graft.operators.Hist.BucketSql
 

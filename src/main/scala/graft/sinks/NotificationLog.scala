@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * stays an external mirror per SURVEY). The rate limit is a broadcast
   * join against the per-(team, day) counts. `NotificationLog.survivors`
   * is its one implementation as a plan and `rateLimitAndAppend` applies
-  * it to a log: a stream does so per micro-batch through
-  * MicroBatchPipeline, and Engine binds the same plan into its
-  * prepared scan.
+  * it to a log: a stream does so per micro-batch inside
+  * `writeStream.foreachBatch`, and Engine binds the same plan into
+  * its prepared scan.
   */
 class NotificationLog(path: String) {
 

@@ -16,8 +16,16 @@ import org.apache.spark.sql.functions._
 object IdempotentSink {
 
   /** foreachBatch handler: (batch, batchId) => write to
-    * `out/batch_id=<id>/`, replacing that partition if it exists. */
-  def parquetByBatch(out: String)(batch: DataFrame, batchId: Long): Unit =
+    * `out/batch_id=<id>/`, replacing that partition if it exists.
+    * `batch_id` is reserved: a data column of that name would be
+    * silently overwritten in the sink while the caller's rows keep
+    * the original values, so such a batch is refused before any
+    * write. Case-insensitive, because withColumn resolves names that
+    * way and would clobber "Batch_ID" just the same. */
+  def parquetByBatch(out: String)(batch: DataFrame, batchId: Long): Unit = {
+    require(!batch.columns.exists(_.equalsIgnoreCase("batch_id")),
+      "IdempotentSink.parquetByBatch: batch must not contain a batch_id " +
+        "column (the sink keys its partitions on it)")
     batch.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       // scoped to this write: only partitions present in the incoming
@@ -25,4 +33,5 @@ object IdempotentSink {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(out)
+  }
 }

@@ -39,16 +39,14 @@ class CommittedReadSpec extends SparkSpec {
       Seq("id", "vq", "nq", "cell"),
       () => Seq((1L, Array(127, 0), 16129L, 0L)).toDF("id", "vq", "nq", "cell"),
       dropped = "vq"),
-    // a ParquetState user: the standing labeling of ClusterRegistry
-    Site("ClusterRegistry", p => graft.streaming.ClusterRegistry.clusters(spark, p),
-      Seq("id", "cluster"), () => Seq((1L, 1L)).toDF("id", "cluster"),
-      dropped = "cluster"),
-    // an AdditiveRegistry user; its fold reads the compaction horizon
-    // from the listed batch_id= directories, with no job
-    Site("CmsRegistry", p => graft.streaming.CmsRegistry.sketch(spark, p),
-      Seq("i", "bucket", "cell"),
-      () => Seq((0, 1L, 2L, 0L)).toDF("i", "bucket", "cell", "batch_id"),
-      dropped = "cell", partitionBy = Seq("batch_id"))
+    // the legacy layout the partition rule exists for: a generation
+    // partitioned by raw cell, so `cell` is a directory, not a column
+    // of the file's footer
+    Site("EmbedDedupRegistry (cell-partitioned)",
+      p => new EmbedDedupRegistry(p, epsPermille = 980).read(spark),
+      Seq("id", "vq", "nq", "cell"),
+      () => Seq((1L, Array(127, 0), 16129L, 0L)).toDF("id", "vq", "nq", "cell"),
+      dropped = "vq", partitionBy = Seq("cell"))
   )
 
   private def fresh(): String =

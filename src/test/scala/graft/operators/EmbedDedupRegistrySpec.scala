@@ -219,8 +219,8 @@ class EmbedDedupRegistrySpec extends SparkSpec {
     }
     // batch_id is reserved by the BATCH-KEYED sink path only: the
     // idempotent sink would silently overwrite a data column of that
-    // name (review) — refused up front; plain dedupAppend, whose
-    // sinks are caller-defined, accepts it
+    // name, so it refuses the batch before any write; plain
+    // dedupAppend, whose sinks are caller-defined, accepts it
     intercept[IllegalArgumentException] {
       reg.dedupAppendBatch(b.withColumn("batch_id", lit(5L)), cents,
         "vec_id", "embedding", dir + "_sink", batchId = 1L)

@@ -143,13 +143,5 @@ class EmptyInputSpec extends SparkSpec {
     assert(Dedup.minhashSignatures(noDocs, "doc_id", "text", 3, 32).count() == 0)
     val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(noPairs).count() == 0)
-    // batch compaction shape over zero events
-    val noEv = Seq.empty[(Long, String, java.sql.Timestamp, Long, Double)]
-      .toDF("user_id", "event_type", "ts", "event_id", "value")
-    val compacted = graft.streaming.StreamOps.compactLatest(
-      noEv, Seq("user_id", "event_type"), "ts", "event_id", Seq("value"))
-    assert(compacted.count() == 0)
-    assert(compacted.columns.toSeq ==
-      Seq("user_id", "event_type", "ts", "event_id", "value"))
   }
 }

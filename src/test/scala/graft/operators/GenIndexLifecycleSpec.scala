@@ -26,8 +26,6 @@ import org.apache.spark.sql.functions.col
 class GenIndexLifecycleSpec extends SparkSpec {
   import spark.implicits._
 
-  private val passage = (1 to 20).map(i => s"gp$i").mkString(" ")
-
   /** Run `race` inside the window after reg's index snapshots its
     * rewrite source; always uninstalls the seam. */
   private def withRaceWindow(index: GenIndex)(race: => Unit)(rewrite: => Unit): Unit = {
@@ -90,54 +88,35 @@ class GenIndexLifecycleSpec extends SparkSpec {
       "racing append's band signatures were lost by the rewrite")
   }
 
-  test("MediaDupRegistry: a dedupAppend racing compactIndex is absorbed") {
-    val dir = Files.createTempDirectory("graft_race_md_").toString
-    def mk() = new MediaDupRegistry(s"$dir/reg", dim = 8, bucketWidth = 4.0,
-      radius = 1)
-    def pay(v: Int): Array[Byte] = Array.fill(64)(v.toByte)
-    def media(id: Long, p: Array[Byte]) =
-      Seq((id, "image", p)).toDF("media_id", "kind", "payload")
-    val reg = mk()
-    reg.dedupAppend(media(1L, pay(100)))
-    reg.dedupAppend(media(2L, pay(200)))
-    reg.dedupAppend(media(3L, pay(50)))
-    val raced = pay(150)
-    withRaceWindow(reg.index) {
-      assert(reg.dedupAppend(media(7L, raced)).count() === 1L)
-    } {
-      assert(reg.compactIndex(spark, maxFiles = 2))
-    }
-    // the raced fingerprint survived the rewrite: a byte-identical
-    // re-upload probes as a duplicate from a FRESH instance
-    val hit = mk().probe(media(9L, raced))
-    assert(col1[Long](hit) == Seq(9L),
-      "racing append's fingerprint bands were lost by the rewrite")
-  }
-
-  test("WinnowRegistry: a dedupAppend racing forget's rewrite is absorbed " +
+  test("DedupRegistry: a dedupAppend racing forget's rewrite is absorbed " +
     "and still passes the forget filter") {
-    val dir = Files.createTempDirectory("graft_race_wr_").toString
-    val reg = new WinnowRegistry(s"$dir/reg", n = 3, w = 4, minShared = 2)
-    reg.dedupAppend(Seq((1L, s"intro $passage outro")).toDF("doc_id", "text"),
-      "doc_id", "text")
-    val p2 = (1 to 20).map(i => s"rr$i").mkString(" ")
+    val dir = Files.createTempDirectory("graft_race_df_").toString
+    val reg = new DedupRegistry(s"$dir/reg")
+    def app(id: Long, text: String) =
+      reg.dedupAppend(Seq((id, text)).toDF("doc_id", "text"), "doc_id",
+        org.apache.spark.sql.functions.md5(col("text")))
+    def fp(text: String) = Seq(text).toDF("text")
+      .select(org.apache.spark.sql.functions.md5(col("text"))).as[String].head()
+    app(1L, "forgotten content one")
+    app(2L, "kept content two")
     // the race interleaves into a FORGET rewrite — the row-local
-    // transform case: the absorbed rows run through the same
-    // id-filter the scanned rows did (doc 7 is not a forgotten id,
-    // so every one of its fingerprints must survive)
+    // transform case: the absorbed rows run through the same fp
+    // filter the scanned rows did, so the raced doc 6 (whose fp is
+    // on the forget list) goes, and the raced doc 7 stays
     withRaceWindow(reg.index) {
-      assert(reg.dedupAppend(Seq((7L, s"raced $p2 tail"))
-        .toDF("doc_id", "text"), "doc_id", "text").count() === 1L)
+      assert(app(6L, "raced forgotten six").count() === 1L)
+      assert(app(7L, "raced content seven").count() === 1L)
     } {
-      reg.forget(spark, Seq(1L))
+      reg.forget(spark, Seq(fp("forgotten content one"), fp("raced forgotten six")))
     }
-    // doc 1 forgotten -> its passage admissible again
-    assert(reg.dedupAppend(Seq((8L, s"re post $passage again"))
-      .toDF("doc_id", "text"), "doc_id", "text").count() === 1L)
-    // doc 7's raced fingerprints absorbed -> its passage still gates
-    assert(reg.dedupAppend(Seq((9L, s"quote $p2 frame"))
-      .toDF("doc_id", "text"), "doc_id", "text").count() === 0L,
-      "racing append's fingerprints were lost by the forget rewrite")
+    // forgotten fingerprints, scanned and absorbed -> admissible again
+    assert(app(8L, "forgotten content one").count() === 1L)
+    assert(app(9L, "raced forgotten six").count() === 1L,
+      "the forget filter was not re-applied to the racing append")
+    // doc 7's raced fingerprint absorbed -> its content still gates
+    assert(app(10L, "raced content seven").count() === 0L,
+      "racing append's fingerprint was lost by the forget rewrite")
+    assert(app(11L, "kept content two").count() === 0L)
   }
 
   // ---- EmbedDedupRegistry: the semantic member rides its own cutover

@@ -88,36 +88,4 @@ object MediaNearDupProps extends Properties("mediaNearDup") {
         got == want
       }
     }
-
-  // random raw payloads (the registry path starts from bytes, not
-  // features): 6-60 random bytes each, stub-kernel features derived
-  private val payload: Gen[Array[Byte]] =
-    Gen.choose(6, 60).flatMap(n =>
-      Gen.listOfN(n, Gen.choose(0, 255)).map(_.map(_.toByte).toArray))
-
-  property("registry survivors == funnel keepers on one batch (no drift " +
-    "between the two implementations of the verdict)") =
-    forAll(Gen.choose(4, 10).flatMap(k =>
-      Gen.listOfN(k, payload))) { pays =>
-      // the registry decides via banded agreement >= dim-radius over
-      // its persisted index; the funnel via banded nd_diff <= radius
-      // in one plan — same quantized fingerprints, same CC min-id
-      // rule, so a single batch appended to an EMPTY registry must
-      // keep exactly the funnel's keepers (the shared-arm discipline:
-      // equality pinned by property, not assumed)
-      val rows = pays.zipWithIndex.map { case (p, i) => (i.toLong, "image", p) }
-      val df = rows.toDF("media_id", "kind", "payload")
-      Seq(0, 1).forall { radius =>
-        val funnelKept = Multimodal.nearDupFunnel(df, Dim, Width, radius,
-            maxBandDf = rows.size + 1)
-          .filter(org.apache.spark.sql.functions.col("kept"))
-          .select("media_id").as[Long].collect().toSet
-        val dir = java.nio.file.Files
-          .createTempDirectory("media_prop_").toString + "/reg"
-        val reg = new graft.operators.MediaDupRegistry(dir, Dim, Width, radius)
-        val regKept = reg.dedupAppend(df)
-          .select("media_id").as[Long].collect().toSet
-        funnelKept == regKept
-      }
-    }
 }

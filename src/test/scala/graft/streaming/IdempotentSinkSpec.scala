@@ -35,4 +35,17 @@ class IdempotentSinkSpec extends SparkSpec {
       assert(afterReplay.select("batch_id").distinct().count() == 2)
     } finally q.stop()
   }
+
+  test("a frame carrying its own batch_id column (any case) is refused; nothing is written") {
+    val out = Files.createTempDirectory("graft_sink_").toString + "/out"
+    val e = intercept[IllegalArgumentException] {
+      IdempotentSink.parquetByBatch(out)(
+        Seq((1L, "a", 9L)).toDF("id", "v", "Batch_ID"), 0L)
+    }
+    assert(e.getMessage.contains("batch_id"), e.getMessage)
+    // no data file anywhere under `out` (absent or empty both count)
+    def files(f: java.io.File): Seq[java.io.File] =
+      Option(f.listFiles).toSeq.flatten.flatMap(c => if (c.isDirectory) files(c) else Seq(c))
+    assert(files(new java.io.File(out)).isEmpty)
+  }
 }

@@ -1,11 +1,15 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline.Arbitrage
 
-/** The whole arbitrage batch plan re-run per micro-batch: stream in
-  * raw grid rows, collect alerts per batch. */
+/** The reference's "re-run the whole batch pipeline every poll"
+  * cadence (SURVEY.md §2.11) as writeStream.foreachBatch: each
+  * micro-batch of raw grid rows flows through the same batch plan,
+  * so batch and streaming share one implementation. */
 class MicroBatchPipelineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,11 +20,14 @@ class MicroBatchPipelineSpec extends SparkSpec {
       "DraftKings", "Caesars")
 
     val alerts = scala.collection.mutable.ArrayBuffer[(Long, String)]()
-    val q = MicroBatchPipeline.start(named,
-      batch => Arbitrage.detect(batch, Seq("DraftKings", "Caesars"), 3),
-      (out, id) => out.select("Team").collect()
-        .foreach(r => alerts.synchronized { alerts += ((id, r.getString(0))) }),
-      intervalMs = 100)
+    val q = named.writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        Arbitrage.detect(batch, Seq("DraftKings", "Caesars"), 3)
+          .select("Team").collect()
+          .foreach(r => alerts.synchronized { alerts += ((id, r.getString(0))) })
+      }
+      .start()
     try {
       // batch 1: the planted arb
       in.addData((1, "NFL", "Chiefs", "ML", "Payout", "+225", "-500"),
@@ -49,14 +56,17 @@ class MicroBatchPipelineSpec extends SparkSpec {
     val t0 = to_timestamp(lit("2026-03-01 12:00:00"))
 
     val delivered = scala.collection.mutable.ArrayBuffer[Int]()
-    val q = MicroBatchPipeline.start(named, identity,
-      (batch, _) => {
+    val q = named.writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         val r = graft.pipeline.Engine.run(batch,
           Seq("DraftKings", "Caesars", "Bet365"), "Bet365", teams,
           None, Map.empty, log, sink, None,
           maxAlertsPerTeamDay = 1, now = t0)
         delivered.synchronized { delivered += r.delivered }
-      }, intervalMs = 100)
+        ()
+      }
+      .start()
     try {
       val arb = Seq(
         (1, "NFL", "Chiefs", "+225", "-500", "+215"),

@@ -6,10 +6,11 @@ import graft.operators.DedupRegistry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
 /** End-to-end CONTINUOUS corpus ingestion from existing pieces:
-  * MicroBatchPipeline (one batch plan per micro-batch) + a quality
+  * writeStream.foreachBatch (one batch plan per micro-batch) + a quality
   * gate + DedupRegistry (persistent cross-batch content dedup).
   * Asserts the production invariants: low-quality docs never land,
   * content seen in ANY earlier batch never lands twice, survivors
@@ -26,15 +27,14 @@ class StreamingCurationSpec extends SparkSpec {
 
     val gate: DataFrame => DataFrame =
       b => b.filter(size(Text.tokens(col("text"))) >= 5)
-    val q = MicroBatchPipeline.start(
-      in.toDF().toDF("doc_id", "text"),
-      gate,
-      (batch, _) => {
-        reg.dedupAppend(batch, "doc_id", md5(col("text")),
+    val q = in.toDF().toDF("doc_id", "text").writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        reg.dedupAppend(gate(batch), "doc_id", md5(col("text")),
           out => out.write.mode("append").parquet(corpus))
         ()
-      },
-      intervalMs = 100)
+      }
+      .start()
     try {
       in.addData(
         (1L, "the quick brown fox jumps over the dog"),
@@ -70,15 +70,14 @@ class StreamingCurationSpec extends SparkSpec {
       "rewrites joins into broadcast hash joins when one side is small enough to " +
       "ship to every executor and the planner fuses operators into whole stage " +
       "generated code that runs tight loops over columnar batches"
-    val q = MicroBatchPipeline.start(
-      in.toDF().toDF("doc_id", "text"),
-      identity,
-      (batch, _) => {
+    val q = in.toDF().toDF("doc_id", "text").writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         reg.dedupAppend(batch, "doc_id", "text",
           persist = out => out.write.mode("append").parquet(corpus))
         ()
-      },
-      intervalMs = 100)
+      }
+      .start()
     try {
       in.addData((1L, a),
         (2L, "completely different text about cooking pasta with garlic butter and fresh basil leaves"))
@@ -138,15 +137,14 @@ class StreamingCurationSpec extends SparkSpec {
     // dedupAppendBatch, so the corpus sink is batch-keyed and
     // exactly-once (the class-doc contract) — not the raw append-mode
     // persist whose crash window the batch-keyed layout closes
-    val q = MicroBatchPipeline.start(
-      in.toDF().toDF("vec_id", "embedding"),
-      identity,
-      (batch, id) => {
+    val q = in.toDF().toDF("vec_id", "embedding").writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, id: Long) =>
         reg.dedupAppendBatch(batch, cents, "vec_id", "embedding",
           sinkPath = corpus, batchId = id)
         ()
-      },
-      intervalMs = 100)
+      }
+      .start()
     try {
       in.addData((1L, Seq(1.0f, 0.0f, 0.0f, 0.0f)),
         (2L, Seq(0.0f, 1.0f, 0.0f, 0.0f)))
@@ -179,177 +177,6 @@ class StreamingCurationSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("MEDIA near-dup gate across micro-batches: an edited re-upload " +
-    "never lands, and crash-retry replays land zero duplicates " +
-    "(batch-keyed exactly-once sink, VERDICT r8 #5)") {
-    implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_cur5_").toString
-    val corpus = s"$dir/corpus"
-    // the media analogue of the lexical gate above: the registry holds
-    // quantized fingerprints only — batch N+1's payloads are gated
-    // against batch N's media without re-reading any payload
-    val reg = new graft.operators.MediaDupRegistry(
-      s"$dir/registry", dim = 8, bucketWidth = 4.0, radius = 1)
-    def payload(vals: Int*): Array[Byte] =
-      vals.flatMap(v => Array.fill(8)(v.toByte)).toArray
-    val base = payload(100, 100, 100, 100, 100, 100, 100, 100)
-    val edited = payload(110, 100, 100, 100, 100, 100, 100, 100) // Hamming 1
-    val other = payload(200, 200, 200, 200, 200, 200, 200, 200)
-    val fresh = payload(50, 50, 50, 50, 50, 50, 50, 50)
-    val in = MemoryStream[(Long, String, Array[Byte])]
-    val seenIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-    // the PRODUCTION wiring (the semantic gate's convention):
-    // foreachBatch's id goes straight into dedupAppendBatch, so the
-    // corpus sink is batch-keyed and exactly-once — not the raw
-    // append-mode persist whose crash window the layout closes
-    val q = MicroBatchPipeline.start(
-      in.toDF().toDF("media_id", "kind", "payload"),
-      identity,
-      (batch, id) => {
-        seenIds += id
-        reg.dedupAppendBatch(batch, sinkPath = corpus, batchId = id)
-        ()
-      },
-      intervalMs = 100)
-    try {
-      in.addData((1L, "image", base), (2L, "image", other))
-      q.processAllAvailable()
-      // 3 is a one-strip edit of batch-1's media 1 -> dropped; 4 is new
-      in.addData((3L, "image", edited), (4L, "image", fresh))
-      q.processAllAvailable()
-      val kept = spark.read.parquet(corpus)
-        .select("media_id").as[Long].collect().toSet
-      assert(kept == Set(1L, 2L, 4L),
-        s"expected media gate survivors {1,2,4}, got $kept")
-      // CRASH-RETRY: re-deliver the second batch under its ORIGINAL
-      // batch id (at-least-once redelivery after a checkpoint-commit
-      // crash). Every row self-matches the registered fingerprints,
-      // the survivor set is empty, and the empty dynamic overwrite
-      // leaves media 4 exactly once in the sink.
-      val retryId = seenIds.last
-      reg.dedupAppendBatch(
-        Seq((3L, "image", edited), (4L, "image", fresh))
-          .toDF("media_id", "kind", "payload"),
-        sinkPath = corpus, batchId = retryId)
-      val counts = spark.read.parquet(corpus)
-        .groupBy("media_id").count().as[(Long, Long)].collect().toMap
-      assert(counts == Map(1L -> 1L, 2L -> 1L, 4L -> 1L),
-        s"crash-retry must not duplicate or drop, got $counts")
-      // and an at-least-once replay through the STREAM also lands
-      // nothing new (a fresh batch id, an empty survivor set)
-      in.addData((3L, "image", edited), (4L, "image", fresh))
-      q.processAllAvailable()
-      assert(spark.read.parquet(corpus).count() == 3,
-        "replayed media micro-batch must not re-land survivors")
-    } finally q.stop()
-  }
-
-  test("MEDIA crash between sink write and fingerprint registration: " +
-    "the batch-keyed replay lands zero duplicates") {
-    // the asymmetric at-least-once window (the EmbedDedupRegistry
-    // class-doc contract) closed for the media member: persist
-    // completes its sink write, the job dies BEFORE registration, the
-    // replay re-derives the identical survivor set (deterministic
-    // kernel + registry state unchanged) and overwrites its own
-    // batch partition byte-identically.
-    val root = Files.createTempDirectory("graft_cur6_").toString
-    val reg = new graft.operators.MediaDupRegistry(
-      s"$root/registry", dim = 8, bucketWidth = 4.0, radius = 1)
-    def payload(v: Int): Array[Byte] = Array.fill(64)(v.toByte)
-    val b = Seq((1L, "image", payload(100)), (2L, "image", payload(200)))
-      .toDF("media_id", "kind", "payload")
-    val sink = s"$root/sink"
-    final class SimCrash extends RuntimeException("simulated crash")
-    intercept[SimCrash] {
-      reg.dedupAppend(b, persist = out => {
-        IdempotentSink.parquetByBatch(sink)(out, 7L)
-        throw new SimCrash
-      })
-    }
-    assert(reg.read(spark).count() == 0, "crash must precede registration")
-    // replay the SAME (batch, batchId): overwrites its own partition
-    val out = reg.dedupAppendBatch(b, sink, batchId = 7L)
-      .select("media_id").as[Long].collect().toSet
-    assert(out == Set(1L, 2L))
-    val sunk = spark.read.parquet(sink)
-      .groupBy("media_id").count().as[(Long, Long)].collect().toMap
-    assert(sunk == Map(1L -> 1L, 2L -> 1L),
-      s"batch-keyed sink must hold exactly one copy per survivor, got $sunk")
-    // a replay AFTER registration self-matches to empty and leaves
-    // the sink untouched
-    assert(reg.dedupAppendBatch(b, sink, batchId = 7L).count() == 0)
-    assert(spark.read.parquet(sink).count() == 2)
-  }
-
-  test("MEDIA RE-PIN MID-STREAM (VERDICT r9 #6): a (dim, width, radius) " +
-    "change against a live media gate aborts loudly, never mixes; the " +
-    "supported migration re-gates the accepted corpus into a fresh " +
-    "registry and the stream re-points at a batch boundary") {
-    implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_cur7_").toString
-    val corpus = s"$dir/corpus"
-    val reg = new graft.operators.MediaDupRegistry(
-      s"$dir/registry", dim = 8, bucketWidth = 4.0, radius = 1)
-    def payload(vals: Int*): Array[Byte] =
-      vals.flatMap(v => Array.fill(8)(v.toByte)).toArray
-    val base = payload(100, 100, 100, 100, 100, 100, 100, 100)
-    val other = payload(200, 200, 200, 200, 200, 200, 200, 200)
-    // 2 shifted strips: Hamming 2 — OUTSIDE radius 1, inside radius 3
-    val edited2 = payload(110, 110, 100, 100, 100, 100, 100, 100)
-    val in = MemoryStream[(Long, String, Array[Byte])]
-    val q = MicroBatchPipeline.start(
-      in.toDF().toDF("media_id", "kind", "payload"),
-      identity,
-      (batch, id) => { reg.dedupAppendBatch(batch, corpus, id); () },
-      intervalMs = 100)
-    try {
-      in.addData((1L, "image", base), (2L, "image", other))
-      q.processAllAvailable()
-      // MID-STREAM PARAMETER CHANGE: an operator re-deploys the gate
-      // against the SAME path with a different quantization width —
-      // the pin must abort the FIRST batch loudly (silently mixing
-      // fingerprints quantized under two widths under-counts
-      // agreement and forgets dup history)
-      val wrong = new graft.operators.MediaDupRegistry(
-        s"$dir/registry", dim = 8, bucketWidth = 8.0, radius = 1)
-      val err = intercept[IllegalArgumentException] {
-        wrong.dedupAppendBatch(
-          Seq((9L, "image", base)).toDF("media_id", "kind", "payload"),
-          corpus, batchId = 99L)
-      }
-      assert(err.getMessage.contains("sigMode"), err.getMessage)
-      // the live gate is unharmed by the aborted open: history gates
-      in.addData((3L, "image", base)) // exact re-upload -> dropped
-      q.processAllAvailable()
-      assert(spark.read.parquet(corpus)
-        .select("media_id").as[Long].collect().toSet == Set(1L, 2L),
-        "the live gate must keep working after the mis-pinned abort")
-      // THE SUPPORTED MIGRATION: widen the radius by re-gating the
-      // accepted corpus into a fresh registry at a NEW path...
-      val reg2 = reg.migrateTo(s"$dir/registry_r3", newDim = 8,
-        newWidth = 4.0, newRadius = 3,
-        accepted = spark.read.parquet(corpus))
-      // ...then the stream re-points at a batch boundary: a 2-strip
-      // edit of HISTORICAL media 1 — invisible at radius 1 — is now
-      // gated by the migrated registry
-      assert(reg2.probe(
-        Seq((7L, "image", edited2)).toDF("media_id", "kind", "payload"))
-        .count() === 1L,
-        "the migrated registry must gate at the NEW radius")
-      assert(reg.probe(
-        Seq((7L, "image", edited2)).toDF("media_id", "kind", "payload"))
-        .count() === 0L,
-        "the old registry (rollback target) must be untouched")
-      val out2 = reg2.dedupAppendBatch(
-        Seq((7L, "image", edited2), (8L, "image", payload(50, 50, 50, 50, 50, 50, 50, 50)))
-          .toDF("media_id", "kind", "payload"),
-        s"$dir/corpus2", batchId = 0L)
-      assert(out2.select("media_id").as[Long].collect().toSet == Set(8L),
-        "post-migration gating must drop the new-radius near-dup and " +
-          "admit the genuinely new media")
-    } finally q.stop()
-  }
-
   test("STREAMING GRAPH INGEST (KnnGraphRegistry): micro-batches " +
     "attach idempotently by vid — an at-least-once replay admits " +
     "nothing and changes no probe row — and an ingested near-dup is " +
@@ -365,12 +192,14 @@ class StreamingCurationSpec extends SparkSpec {
       k = 4, iters = 2, seed = "spec")
     val in = MemoryStream[(Long, Array[Float])]
     val attached = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = MicroBatchPipeline.start(
-      in.toDF().toDF("vec_id", "embedding"),
-      identity,
-      (batch, _) => { attached += reg.ingest(batch, "vec_id", "embedding",
-        beam = 8, hops = 3, entries = 2); () },
-      intervalMs = 100)
+    val q = in.toDF().toDF("vec_id", "embedding").writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        attached += reg.ingest(batch, "vec_id", "embedding",
+          beam = 8, hops = 3, entries = 2)
+        ()
+      }
+      .start()
     try {
       // batch 1: a genuinely new vector + a near-dup of node 3
       in.addData((40L, vec(40L)), (1003L, vec(3L)))
@@ -422,11 +251,13 @@ class StreamingCurationSpec extends SparkSpec {
     reg.ingest(seed, "vec_id", "embedding")
     val in = MemoryStream[(Long, Array[Float])]
     val ingested = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = MicroBatchPipeline.start(
-      in.toDF().toDF("vec_id", "embedding"),
-      identity,
-      (batch, _) => { ingested += reg.ingest(batch, "vec_id", "embedding"); () },
-      intervalMs = 100)
+    val q = in.toDF().toDF("vec_id", "embedding").writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        ingested += reg.ingest(batch, "vec_id", "embedding")
+        ()
+      }
+      .start()
     try {
       in.addData((12L, vec(12L)), (13L, vec(13L)))
       q.processAllAvailable()
@@ -486,16 +317,15 @@ class StreamingCurationSpec extends SparkSpec {
     @volatile var cents = centsA
     val seenIds = scala.collection.mutable.ArrayBuffer.empty[Long]
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = MicroBatchPipeline.start(
-      in.toDF().toDF("vec_id", "embedding"),
-      identity,
-      (batch, id) => {
+    val q = in.toDF().toDF("vec_id", "embedding").writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, id: Long) =>
         seenIds += id
         reg.dedupAppendBatch(batch, cents, "vec_id", "embedding",
           sinkPath = corpus, batchId = id)
         ()
-      },
-      intervalMs = 100)
+      }
+      .start()
     try {
       in.addData((1L, Seq(1.0f, 0.0f, 0.0f, 0.0f)),
         (2L, Seq(0.0f, 1.0f, 0.0f, 0.0f)))
@@ -576,11 +406,13 @@ class StreamingCurationSpec extends SparkSpec {
     reg.fit(spark, seed, "doc_id", "text", Cap)
     val in = MemoryStream[(Long, String)]
     val indexed = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = MicroBatchPipeline.start(
-      in.toDF().toDF("doc_id", "text"),
-      identity,
-      (batch, _) => { indexed += reg.ingest(batch, "doc_id", "text"); () },
-      intervalMs = 100)
+    val q = in.toDF().toDF("doc_id", "text").writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        indexed += reg.ingest(batch, "doc_id", "text")
+        ()
+      }
+      .start()
     try {
       val qv = li.withVec(
         li.docTokens(allDocs.take(2).toDF("doc_id", "text"),

@@ -2,14 +2,18 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.functions.Text
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import java.sql.Timestamp
 
 /** Streaming ingestion dedup by CONTENT fingerprint: documents stream
-  * in, each gets a simhash, and near-identical re-submissions within
-  * the watermark are dropped — the streaming face of the batch dedup
-  * suite over the same Text primitives. */
+  * in, each gets a fingerprint from the Text primitives, and
+  * re-submissions within the watermark are dropped by Spark's
+  * dropDuplicatesWithinWatermark. Then the alerting tail as a stream:
+  * each micro-batch of alerts goes through the notification log's
+  * rate limit and then to the sink, inside writeStream.foreachBatch. */
 class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -20,13 +24,13 @@ class StreamingDedupSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(Timestamp, Long, String)]
     val docs = in.toDF().toDF("ts", "doc_id", "text")
-    val fingerprinted = docs
+    val deduped = docs
       .withColumn("toks", Text.tokens(col("text")))
       .withColumn("hashes", transform(col("toks"), t => Text.md5Long(t, 4)))
       .withColumn("fp", Text.simhashFromHashes(col("hashes"), 16))
       .drop("toks", "hashes")
-    val deduped = StreamOps.dedupWithinWatermark(
-      fingerprinted, "ts", Seq("fp"), "1 hour")
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("fp")
 
     val q = deduped.writeStream.format("memory")
       .queryName("sd_out").outputMode("append").start()
@@ -45,8 +49,15 @@ class StreamingDedupSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(Timestamp, Long, String)]
     val docs = in.toDF().toDF("ts", "doc_id", "text")
-    val q = StreamOps.nearDupWithinWatermark(docs, "text", "ts", "1 hour")
-      .writeStream.format("memory").queryName("nd_out")
+    // order-invariant token-multiset fingerprint: md5 of the sorted
+    // Text.tokens array (lower() first: tokens match [a-z0-9]+ runs)
+    val deduped = docs
+      .withColumn("_nd_fp",
+        md5(concat_ws(" ", sort_array(Text.tokens(lower(col("text")))))))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("_nd_fp")
+      .drop("_nd_fp")
+    val q = deduped.writeStream.format("memory").queryName("nd_out")
       .outputMode("append").start()
     try {
       in.addData(
@@ -70,10 +81,14 @@ class StreamingDedupSpec extends SparkSpec {
 
     val in = MemoryStream[(String, Timestamp, String)]
     val alerts = in.toDF().toDF("team", "ts", "message")
-    val q = MicroBatchPipeline.start(alerts,
-      batch => log.rateLimitAndAppend(batch, maxPerDay = 2),
-      (out, _) => graft.sinks.Alerting.deliver(out, "message", sink),
-      intervalMs = 100)
+    val q = alerts.writeStream
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        graft.sinks.Alerting.deliver(
+          log.rateLimitAndAppend(batch, maxPerDay = 2), "message", sink)
+        ()
+      }
+      .start()
     try {
       in.addData(("A", ts(0), "m1"), ("A", ts(1), "m2"))
       q.processAllAvailable()

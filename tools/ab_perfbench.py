@@ -4,10 +4,14 @@ working tree.
 
     python3 tools/ab_perfbench.py <parent-rev> <workload> <pairs> [--seed N] [--trace] [--jfr]
 
-Run from the root of a checkout. The parent revision is exported with
-`git archive` into a temporary directory; each pair then runs
-`perfbench/run.py` once in the parent export and once in the working
-tree, with the same seed (seed, seed+1, ... per pair), the run length
+Run from the root of a checkout. Both sides run from `git archive`
+exports, each in a fresh temporary directory with no build caches,
+traces or stray files of earlier work: the parent revision, and the
+working tree as `git stash create` records it (HEAD when the tree is
+clean). That records tracked files only, so a new file must be
+`git add`ed to be part of the change side. Each pair
+then runs `perfbench/run.py` once in each export, with the same seed
+(seed, seed+1, ... per pair), the run length
 BENCHMARK.json sets, and alternating which side goes first. Each side's
 benchmark build is cached by its own source stamp, so only the first
 run of a side compiles.
@@ -43,6 +47,15 @@ import statistics
 import subprocess
 import sys
 import tempfile
+
+
+def export(root, rev, prefix):
+    """A fresh temporary directory holding `git archive <rev>`."""
+    out = tempfile.mkdtemp(prefix=prefix)
+    archive = subprocess.run(["git", "archive", rev], cwd=root,
+                             capture_output=True, check=True).stdout
+    subprocess.run(["tar", "-x", "-C", out], input=archive, check=True)
+    return out
 
 
 def run_once(checkout, workload, seed, seconds, trace=False, env=None):
@@ -205,12 +218,14 @@ def main():
     seconds = bench["run_seconds"]
     better = {m["name"]: m["better"] for m in bench["end_to_end"]}
 
-    parent = tempfile.mkdtemp(prefix="ab-parent-")
+    change_rev = subprocess.run(["git", "stash", "create"], cwd=root, capture_output=True,
+                                text=True, check=True).stdout.strip() or "HEAD"
+    sides = {}
     try:
-        archive = subprocess.run(["git", "archive", a.parent_rev], cwd=root,
-                                 capture_output=True, check=True).stdout
-        subprocess.run(["tar", "-x", "-C", parent], input=archive, check=True)
-        sides = {"parent": parent, "change": root}
+        sides["parent"] = export(root, a.parent_rev, "ab-parent-")
+        sides["change"] = export(root, change_rev, "ab-change-")
+        print(f"parent {a.parent_rev} in {sides['parent']}; "
+              f"change {change_rev} in {sides['change']}", flush=True)
         runs = {"parent": [], "change": []}
         for i in range(a.pairs):
             seed = a.seed + i
@@ -251,7 +266,8 @@ def main():
             profiled_comparison(sides, a.workload, a.seed, seconds)
         return 0
     finally:
-        shutil.rmtree(parent, ignore_errors=True)
+        for d in sides.values():
+            shutil.rmtree(d, ignore_errors=True)
 
 
 if __name__ == "__main__":
