@@ -27,6 +27,16 @@ import org.apache.spark.sql.SparkSession
   *    arrays by itself.
   *  - fs.file.impl = NioLocalFileSystem: local writes set permission
   *    bits in-process instead of forking `chmod` per file.
+  *  - fileoutputcommitter.marksuccessfuljobs = false: an append
+  *    commits by rename alone. With the marker on, every append to a
+  *    state path rewrote its `_SUCCESS` and truncated the checksum
+  *    sidecar; on an ext4 disk mounted with `discard`, freeing a block
+  *    already on disk costs ~70 ms, and dropping the marker cut the
+  *    benchmark's median cycle by 12-17 % on a 4-core VM with such a
+  *    disk. Nothing reads the marker: what counts as committed is
+  *    `RegistryIO.committedDataExists`, which counts data files and
+  *    skips `_`/`.` names, so state that still holds an old marker
+  *    reads the same.
   */
 object GraftSession {
   val ExcludedRules = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
@@ -62,7 +72,8 @@ object GraftSession {
     "spark.sql.optimizer.excludedRules" -> ExcludedRules,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
-    "spark.sql.extensions" -> "graft.GraftExtensions"
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false"
   )
 
   def build(cpus: String): SparkSession = {
@@ -84,6 +95,8 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // no chmod process per written file (see NioLocalFileSystem)
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      // appends commit by rename alone: no `_SUCCESS` rewrite per append
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -184,12 +184,18 @@ class GenIndex(tableBase: String, rootLocation: String,
          |LOCATION '${location(gen)}'""".stripMargin)
   }
 
+  /** `createTable` unless the catalog already holds the generation's
+    * table: a registered table skips parsing and analysing the DDL,
+    * which every probe and append would otherwise pay. */
+  private def registerTable(spark: SparkSession, gen: Int): Unit =
+    if (!spark.catalog.tableExists(tableName(gen))) createTable(spark, gen)
+
   /** Register the ACTIVE generation's table (an in-memory catalog
     * forgets bucket metadata across JVMs; the files keep it) and
     * return its name. */
   def ensure(spark: SparkSession): String = {
     val gen = currentGen(spark)
-    createTable(spark, gen)
+    registerTable(spark, gen)
     tableName(gen)
   }
 
@@ -212,7 +218,7 @@ class GenIndex(tableBase: String, rootLocation: String,
     * check one generation while scanning another). */
   def ensureBound(spark: SparkSession): (String, String) = {
     val gen = currentGen(spark)
-    createTable(spark, gen)
+    registerTable(spark, gen)
     (tableName(gen), location(gen))
   }
 

@@ -62,11 +62,13 @@ object Scores {
     * (Team, Sport) appears in the finished-games set. The reference
     * writes left-join + `!= 'Game Over'`, which KEEPS rows with no
     * match (P11 NaN-keeping semantics) — exactly a left_anti join.
-    * finished is distinct-ed and broadcast: per scan it is at most a
-    * few hundred teams regardless of odds volume.
+    * finished is broadcast as is: per scan it is at most a few hundred
+    * teams regardless of odds volume, and a repeated key returns the
+    * same anti-join rows, so a `distinct` would only add a shuffle
+    * stage (and a job) per scan.
     */
   def removeFinished(odds: DataFrame, finished: DataFrame): DataFrame =
     odds.join(
-      broadcast(finished.select("Team", "Sport").na.drop("any").distinct()),
+      broadcast(finished.select("Team", "Sport").na.drop("any")),
       Seq("Team", "Sport"), "left_anti")
 }

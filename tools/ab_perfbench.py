@@ -20,9 +20,11 @@ Prints every run, then per end-to-end metric each side's median and
 quartiles, the change's win count (ties count for neither side), and
 whether a gain could be claimed on it: the change wins at least 9/10 of
 the pairs and the medians differ by more than the parent's
-interquartile distance. Every run must report `correct`; a pair with a
-run that does not is listed and counts as a loss, and that run's line
-shows its notes' `dup_recall`, `unique_kept_frac` and `failed_frac`.
+interquartile distance. Below 10 pairs no gain verdict is given: the
+line says there are too few pairs for a claim. Every run must report
+`correct`; a pair with a run that does not is listed and counts as a
+loss, and that run's line shows its notes' `dup_recall`,
+`unique_kept_frac` and `failed_frac`.
 
 With --trace, one traced run per side follows the pairs (the first
 pair's seed), and its per-layer metrics print side by side, with the
@@ -33,11 +35,15 @@ as 0 (layers the workload does not run) are left out.
 With --jfr, one profiled run per side follows (the first pair's seed):
 the JVM records with Flight Recorder through JAVA_TOOL_OPTIONS (deep
 stacks, so Catalyst frames are not cut off), and the driver thread's
-execution samples print side by side, split by query phase: analysis,
-optimizer, planning, AQE, other. A sample's phase is the first phase
-marker met walking its stack from the innermost frame (so the optimizer
-and planner runs that AQE starts count as optimizer and planning). The
-count of processes the JVM forked prints too.
+samples print side by side, split by query phase: analysis, optimizer,
+planning, AQE, other. They are its execution samples and its native
+method samples: an execution sample never catches a thread blocked in
+native code, such as a file open or delete. A sample whose innermost
+frame is a filesystem call (`open0`, `delete0`, `unlink0`, `rename0`)
+counts on a "filesystem" line of its own; any other sample's phase is
+the first phase marker met walking its stack from the innermost frame
+(so the optimizer and planner runs that AQE starts count as optimizer
+and planning). The count of processes the JVM forked prints too.
 """
 import argparse
 import json
@@ -131,9 +137,20 @@ PHASES = [
     ("AQE", ("org.apache.spark.sql.execution.adaptive.",)),
 ]
 DRIVER_THREAD = "main"
+# native methods that block the calling thread in the filesystem
+FS_CALLS = ("open0", "delete0", "unlink0", "rename0")
+SAMPLE_LINES = [p for p, _ in PHASES] + ["other", "filesystem"]
+MIN_CLAIM_PAIRS = 10
+
+
+def method_name(frame):
+    """`open0` of a frame printed as `java.io.FileOutputStream.open0(String, boolean)`."""
+    return frame.split("(", 1)[0].rsplit(".", 1)[-1]
 
 
 def phase_of(frames):
+    if frames and method_name(frames[0]) in FS_CALLS:
+        return "filesystem"
     for frame in frames:
         for phase, markers in PHASES:
             if any(m in frame for m in markers):
@@ -143,9 +160,9 @@ def phase_of(frames):
 
 def jfr_profile(recording):
     """(driver samples per phase, forked processes) of a recording."""
-    counts = {phase: 0 for phase, _ in PHASES}
-    counts["other"] = 0
-    p = subprocess.Popen(["jfr", "print", "--events", "jdk.ExecutionSample",
+    counts = {phase: 0 for phase in SAMPLE_LINES}
+    p = subprocess.Popen(["jfr", "print", "--events",
+                          "jdk.ExecutionSample,jdk.NativeMethodSample",
                           "--stack-depth", "1024", recording],
                          stdout=subprocess.PIPE, text=True)
     thread, frames, in_stack = None, [], False
@@ -183,7 +200,7 @@ def profiled_comparison(sides, workload, seed, seconds):
               f"change={out['change'][0]}")
         print(f"  {'driver samples':28s} {'parent':>16s} {'change':>16s}")
         totals = {side: max(sum(out[side][1].values()), 1) for side in out}
-        for phase in [p for p, _ in PHASES] + ["other"]:
+        for phase in SAMPLE_LINES:
             print(f"  {phase:28s} " + " ".join(
                 f"{out[s][1][phase]:7d} ({100 * out[s][1][phase] / totals[s]:4.1f}%)"
                 for s in ("parent", "change")))
@@ -209,7 +226,8 @@ def main():
     p.add_argument("--trace", action="store_true",
                    help="after the pairs, one traced run per side, per-layer metrics side by side")
     p.add_argument("--jfr", action="store_true",
-                   help="after the pairs, one profiled run per side, driver samples per query phase")
+                   help="after the pairs, one profiled run per side, driver samples "
+                        "per query phase and in the filesystem")
     a = p.parse_args()
 
     root = os.getcwd()
@@ -253,12 +271,17 @@ def main():
             wins = sum(1 for x, y, ok in pairs if ok and (x - y) * sign > 0)
             pq = quartiles([x for x, _, _ in pairs])
             cq = quartiles([y for _, y, _ in pairs])
-            gain = wins >= 0.9 * a.pairs and (pq[1] - cq[1]) * sign > pq[2] - pq[0]
+            if a.pairs < MIN_CLAIM_PAIRS:
+                verdict = f"too few pairs for a claim ({a.pairs} < {MIN_CLAIM_PAIRS})"
+            elif wins >= 0.9 * a.pairs and (pq[1] - cq[1]) * sign > pq[2] - pq[0]:
+                verdict = "gain holds"
+            else:
+                verdict = "gain not shown"
             print(f"  {name:13s} parent median {pq[1]:.4g} (q1 {pq[0]:.4g}, q3 {pq[2]:.4g})"
                   f" | change median {cq[1]:.4g} (q1 {cq[0]:.4g}, q3 {cq[2]:.4g})"
                   f" | change wins {wins}/{a.pairs}"
                   f" | median change {100 * (cq[1] - pq[1]) / pq[1] if pq[1] else 0:+.1f}%"
-                  f" | gain {'holds' if gain else 'not shown'}")
+                  f" | {verdict}")
         if a.trace:
             traced_comparison(sides, a.workload, a.seed, seconds,
                               [m["name"] for m in bench["per_layer"]])
